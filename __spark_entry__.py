@@ -784,7 +784,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # labeling: lang='en' is the "seed" class) ----
     def text_nb(spark, sf):
         d = _t(spark, sf, "documents").withColumn(
-            "label", (F.col("lang") == "en").cast("int")
+            "label", F.coalesce((F.col("lang") == "en").cast("int"), F.lit(0))
         )
         return TX.nb_quality(d).select("doc_id", "n_tokens", "nb_score")
     q["text_nb"] = text_nb
@@ -1847,7 +1847,8 @@ WITH caps AS (
   FROM documents),
 w AS (
   SELECT surt_key, ts, digest,
-         lag(digest) OVER (PARTITION BY surt_key ORDER BY ts, digest) AS prev
+         lag(digest) OVER (PARTITION BY surt_key
+                            ORDER BY ts NULLS FIRST, digest NULLS FIRST) AS prev
   FROM caps),
 s AS (
   SELECT surt_key,
@@ -1877,7 +1878,8 @@ WITH caps AS (
   FROM documents),
 w AS (
   SELECT surt_key, ts, digest,
-         lag(digest) OVER (PARTITION BY surt_key ORDER BY ts, digest) AS prev
+         lag(digest) OVER (PARTITION BY surt_key
+                            ORDER BY ts NULLS FIRST, digest NULLS FIRST) AS prev
   FROM caps),
 s AS (
   SELECT surt_key,

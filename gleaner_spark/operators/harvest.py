@@ -24,11 +24,17 @@ becomes four declarative stages:
    tables. Prov is emitted for every extracted doc *before* the
    exists-check, reproducing prov.go's re-put-every-run behavior
    (jsonutils.go:378 precedes :384).
+
+Stages 2-4 run through one kernel shared by the batch pipeline and
+the streaming micro-batch: ``processed_pages`` (the persisted fused
+extract/process output), ``append_new_documents`` and ``append_prov``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -336,7 +342,6 @@ def extract_and_process(fetched: DataFrame, sources: list[Source],
 
 
 def _first_per_key(df: DataFrame, key: str,
-                   fuse_sink_cluster: bool = False,
                    cluster_files: int = 4) -> DataFrame:
     """Deterministic within-run winner per identity key: lowest
     (position, doc_idx) = crawl order, mirroring the reference's
@@ -344,10 +349,10 @@ def _first_per_key(df: DataFrame, key: str,
     later uploads hit the StatObject skip (jsonutils.go:384-386).
     groupBy + min_by keeps map-side partial aggregation (a window
     would sort whole partitions). (position, doc_idx) is unique within
-    a source in the batch pipeline; url breaks ties deterministically
-    for callers that zero the position (streaming micro-batches).
+    a source; url breaks the remaining ties deterministically (rows of
+    different sources whose keys collide, see below).
 
-    ``fuse_sink_cluster`` fuses this exchange with the sink's: rows
+    The exchange is fused with the sink's: rows
     are hash-partitioned on two expressions derived from ``key``
     ALONE — its first '/'-segment (equal to source_name for every
     slash-free source name, i.e. always in practice) and a bounded
@@ -368,16 +373,8 @@ def _first_per_key(df: DataFrame, key: str,
     widest column in the pipeline — the fixed JSON-LD text — rides
     two full shuffles: once keyed for dedup, once re-clustered for
     the sink."""
-    if "position" not in df.columns or "doc_idx" not in df.columns:
-        # exotic-caller path (no crawl order to key a winner on):
-        # arbitrary-first semantics, not eligible for exchange fusion
-        # (min_by over the full row would need every column orderable)
-        return df.dropDuplicates([key])
     others = [c for c in df.columns if c != key]
-    order = ["position", "doc_idx"] + (["url"] if "url" in df.columns else [])
-    row = F.min_by(F.struct(*others), F.struct(*order))
-    if not fuse_sink_cluster:
-        return df.groupBy(key).agg(row.alias("_r")).select(key, "_r.*")
+    row = F.min_by(F.struct(*others), F.struct("position", "doc_idx", "url"))
     seg = F.substring_index(F.col(key), "/", 1)
     salt = F.pmod(F.xxhash64(F.col(key)), F.lit(cluster_files))
     return (
@@ -390,7 +387,6 @@ def _first_per_key(df: DataFrame, key: str,
 
 def dedup_new_documents(spark: SparkSession, processed: DataFrame,
                         url_seen: DataFrame | None,
-                        expected_seen: int = 1_000_000,
                         sketch: BloomSketch | None = None,
                         cluster_files: int = 4) -> DataFrame:
     """S27: Bloom-prefiltered anti-join on (source_name, unique_id).
@@ -420,21 +416,20 @@ def dedup_new_documents(spark: SparkSession, processed: DataFrame,
     )
     if url_seen is None:
         return _first_per_key(
-            processed, "seen_key",
-            fuse_sink_cluster=True, cluster_files=cluster_files,
+            processed, "seen_key", cluster_files=cluster_files
         ).drop("seen_key")
     seen_keys = url_seen.select(
         F.concat_ws("/", "source_name", "unique_id").alias("seen_key")
     )
     if sketch is None:
-        sketch = build_bloom(seen_keys, "seen_key", expected=expected_seen)
+        sketch = build_bloom(seen_keys, "seen_key", expected=1_000_000)
     tagged = with_might_contain(processed, "seen_key", sketch, "maybe_seen")
     definitely_new = tagged.filter(~F.col("maybe_seen"))
     candidates = tagged.filter(F.col("maybe_seen"))
     verified_new = candidates.join(seen_keys, "seen_key", "left_anti")
     return _first_per_key(
         definitely_new.unionByName(verified_new), "seen_key",
-        fuse_sink_cluster=True, cluster_files=cluster_files,
+        cluster_files=cluster_files,
     ).drop("seen_key", "maybe_seen")
 
 
@@ -611,6 +606,87 @@ def prov_table(processed: DataFrame, sources: list[Source], bucket: str,
         .withColumn("date", F.lit(run_date))
         .withColumnRenamed("unique_id", "sha")
     )
+
+
+@contextmanager
+def processed_pages(fetched: DataFrame, sources: list[Source],
+                    global_strict: bool = False,
+                    context_maps: dict[str, dict] | None = None
+                    ) -> Iterator[DataFrame]:
+    """Fused extract/process over ``fetched``, persisted for the sinks
+    that read it and unpersisted on exit, also when a sink raises (a
+    crashed phase 2 must not leak the frame in a long-lived session).
+    emit_raw=False: the sinks store fixed_jsonld only; the raw text
+    would double the Arrow transfer and the persist."""
+    hw = {s.name: s.headless_wait for s in sources}
+    processed = extract_and_process(
+        fetched, sources, hw, global_strict, context_maps=context_maps,
+        emit_raw=False,
+    ).persist()
+    try:
+        yield processed
+    finally:
+        processed.unpersist()
+
+
+class DocumentsAppend(NamedTuple):
+    snapshot: dict  # the lake entry; unpublished when no row was new
+    new_rows: int
+    # the sketch checkpoint loaded before the append, and whether the
+    # table held documents: the batch pipeline folds the new keys into
+    # the next checkpoint from these
+    prior_sketch: tuple[BloomSketch, int, int] | None
+    had_documents: bool
+
+
+def append_new_documents(spark: SparkSession, lake, processed: DataFrame,
+                         run_id: str, cluster_files: int) -> DocumentsAppend:
+    """Append the documents of ``processed`` that the lake has not
+    seen, as one snapshot. The seen set IS the documents table, keyed
+    on identifier.UniqueId like the reference's object names and
+    StatObject check (jsonutils.go:355-357,384-386); a seen sketch
+    checkpoint under capacity skips the build-from-table scan.
+
+    Dedup leaves the rows clustered for the sink, which therefore
+    adds no shuffle (files_per_partition=0). The new-row count rides
+    the same write via an Observation whose CollectMetrics node must
+    stay at the plan ROOT: below a shuffle, AQE's empty-relation
+    propagation deletes it when everything dedups away, and
+    Observation.get fails. An all-seen input publishes nothing (the
+    lake refuses dataless snapshots)."""
+    from pyspark.sql import Observation
+
+    seen = lake.table("documents").read(spark)
+    prior = load_seen_sketch(lake)
+    sketch = (prior[0] if seen is not None and prior is not None
+              and prior[1] <= prior[2] else None)
+    # the raw text and page counters never reach the sink: drop them
+    # before the dedup shuffle
+    docs = processed.filter(F.col("doc_idx") >= 0).drop(
+        "jsonld", "page_bytes", "page_first"
+    )
+    new_docs = dedup_new_documents(spark, docs, seen, sketch=sketch,
+                                   cluster_files=cluster_files)
+    obs = Observation()
+    snap = lake.table("documents").append(
+        documents_table(new_docs).observe(obs, F.count(F.lit(1)).alias("n")),
+        run_id=run_id, partition_by=["source_name"], files_per_partition=0,
+    )
+    return DocumentsAppend(snap, int(obs.get["n"]), prior, seen is not None)
+
+
+def append_prov(lake, processed: DataFrame, sources: list[Source],
+                bucket: str, run_date: str, run_id: str,
+                cluster_files: int) -> None:
+    """PROV for every processed doc, seen or not (the reference
+    re-puts it each run, jsonutils.go:378 precedes :384), appended as
+    one snapshot. The exchange moves only (source, id, url) keys, the
+    rendered graph is born clustered, and the sink adds no shuffle."""
+    prov = prov_table(processed.filter(F.col("doc_idx") >= 0), sources,
+                      bucket, run_date, cluster_files=cluster_files)
+    lake.table("prov").append(prov, run_id=run_id,
+                              partition_by=["source_name"],
+                              files_per_partition=0)
 
 
 def metrics_from_processed(processed: DataFrame, run_id: str) -> DataFrame:

@@ -269,6 +269,12 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
         rows["duration_ms"].append(
             (1000 * (1 + i % 10)) if kind != "image" else None
         )
+    # object columns keep Python ints and None: a plain list with None
+    # becomes float64 (and so does a nullable Int32 array in the
+    # records the non-Arrow createDataFrame path builds), which the
+    # int schema columns reject
+    for col in ("width", "height", "duration_ms"):
+        rows[col] = pd.Series(rows[col], dtype=object)
     pdf = pd.DataFrame(rows)
     return spark.createDataFrame(pdf, MEDIA_SCHEMA).coalesce(
         max(2, n // 16)

@@ -66,7 +66,7 @@ def change_stats(capture_index: DataFrame) -> DataFrame:
     NULL first/last (downstream: NULL priority, sorted out of the
     budget cut — pinned)."""
     w = Window.partitionBy("surt_key").orderBy(
-        F.col("_ts").asc(), F.col("digest").asc()
+        F.col("_ts").asc_nulls_first(), F.col("digest").asc_nulls_first()
     )
     prev = F.lag("digest").over(w)
     chg = (
@@ -153,7 +153,11 @@ def weight_by_host_rank(priorities: DataFrame, ranks: DataFrame,
     return (
         priorities.withColumn("_rk", jk)
         .join(
-            ranks.select(F.col("host_key").alias("_rk"), "rank"),
+            # one row per key: a duplicated host_key in a caller's rank
+            # frame would otherwise fan out the left join and put the
+            # same URL in the budget cut twice; keep the max rank
+            ranks.groupBy(F.col("host_key").alias("_rk"))
+            .agg(F.max("rank").alias("rank")),
             "_rk", "left",
         )
         .crossJoin(F.broadcast(floor))

@@ -275,75 +275,29 @@ def run_harvest(
                 frontier, pages,
                 broadcast_frontier=0 < res.frontier_size <= broadcast_frontier_max_rows,
             )
-        hw = {s.name: s.headless_wait for s in sources}
-        # emit_raw=False: the pipeline sinks fixed_jsonld only; the raw
-        # pre-fixup text would double the Arrow transfer and the persist
-        processed = hv.extract_and_process(
-            fetched, sources, hw, global_strict, context_maps=context_maps,
-            emit_raw=False,
-        )
-        processed = processed.persist()
-        try:
-            docs_only = processed.filter(F.col("doc_idx") >= 0)
+        # Cluster width trades files against tasks: per source it is
+        # both the max sink files AND the max dedup/write tasks, so size
+        # it to the cores a source's share of the run deserves — a
+        # single-source harvest gets full parallelism, a 10^3-source
+        # crawl stays at 4 files/source. The prov sink uses the same
+        # width.
+        cfiles = max(4, -(-spark.sparkContext.defaultParallelism
+                          // max(1, len(sources))))
+        with hv.processed_pages(fetched, sources, global_strict,
+                                context_maps) as processed:
             _mark("plan", _t)
-
-            # the seen set IS the documents table projection, keyed on
-            # identifier.UniqueId — the reference's object names and its
-            # StatObject idempotency check (jsonutils.go:355-357,384-386)
-            # — so no separate url_seen table to keep in sync
-            seen_src = lake.table("documents").read(spark)
-            seen = seen_src.select("source_name", "unique_id") if seen_src is not None else None
-            # seen-set sketch from the lake checkpoint (north rule): skips
-            # the build-from-table scan; only used while under capacity
-            sk_entry = hv.load_seen_sketch(lake)
-            sketch = (
-                sk_entry[0]
-                if seen is not None and sk_entry is not None and sk_entry[1] <= sk_entry[2]
-                else None
-            )
-            # the raw pre-fixup text never reaches a sink (documents store
-            # the fixed text as `jsonld`) — drop it before the dedup
-            # shuffle so the widest column doesn't ride through it.
-            # Cluster width trades files against tasks: per source it is
-            # both the max sink files AND the max dedup/write tasks, so
-            # size it to the cores a source's share of the run deserves —
-            # a single-source harvest gets full parallelism, a 10^3-source
-            # crawl stays at 4 files/source.
-            cfiles = max(4, -(-spark.sparkContext.defaultParallelism
-                              // max(1, len(sources))))
-            new_docs = hv.dedup_new_documents(
-                spark, docs_only.drop("jsonld", "page_bytes", "page_first"), seen,
-                sketch=sketch, cluster_files=cfiles,
-            )
-            docs_out = hv.documents_table(new_docs)
-            # dedup left the rows hash-clustered on (key-segment, salt) —
-            # the sink writes ≤cfiles files per source with NO shuffle of
-            # its own (files_per_partition=0). The CollectMetrics node
-            # must stay at the plan ROOT: put below a new shuffle stage,
-            # AQE's runtime empty-relation propagation deletes it when a
-            # re-run dedups everything away, and Observation.get fails
-            # (pinned by the idempotency test).
-
-            # write computes the dedup DAG once; the new-row count rides
-            # on the SAME job via an Observation (no second read of the
-            # snapshot — one fewer fixed-cost job per run, which is what
-            # small-cluster efficiency is made of)
-            obs = Observation()
-            docs_out = docs_out.observe(obs, F.count(F.lit(1)).alias("n"))
-            _mark("dedup_plan", _t)
-            snap = lake.table("documents").append(
-                docs_out, run_id=run_id, partition_by=["source_name"],
-                files_per_partition=0,
-            )
-            res.new_documents = int(obs.get["n"])
+            docs = hv.append_new_documents(spark, lake, processed, run_id,
+                                           cfiles)
+            res.new_documents = docs.new_rows
             _mark("documents_append", _t)
-            snap_dir = f"{lake.table('documents').dir}/{snap['data_dir']}"
+            snap = docs.snapshot
             # zero-new-row appends never entered the manifest (the lake
             # refuses dataless snapshots), so there is nothing to retract
             sketch_thread = None
             sketch_err: list[BaseException] = []
             sketch_bg_s = [0.0]
             if res.new_documents > 0:
+                snap_dir = f"{lake.table('documents').dir}/{snap['data_dir']}"
                 snap_keys = spark.read.parquet(snap_dir).select(
                     F.concat_ws("/", "source_name", "unique_id").alias("seen_key")
                 )
@@ -352,7 +306,7 @@ def run_harvest(
                 # counter may understate it); on a fresh lake the new keys
                 # ARE the table — skip the extra full-table count job
                 all_keys = None
-                if seen is not None:
+                if docs.had_documents:
                     all_keys = lake.table("documents").read(spark).select(
                         F.concat_ws("/", "source_name", "unique_id").alias("seen_key")
                     )
@@ -370,7 +324,7 @@ def run_harvest(
                     t0 = time.time()
                     try:
                         hv.checkpoint_seen_sketch(
-                            spark, lake, snap_keys, sk_entry,
+                            spark, lake, snap_keys, docs.prior_sketch,
                             res.new_documents, run_id,
                             all_keys=all_keys,
                             covers_snapshot_id=snap["snapshot_id"],
@@ -402,21 +356,11 @@ def run_harvest(
                 )
             _mark("metrics", _t)
 
-            # prov: emitted for every processed doc each run (reference
-            # quirk, one row per processed doc → count comes free)
+            # prov: one row per processed doc, so the count comes free
             res.prov_records = res.extracted
             if res.prov_records:
-                # narrow-first clustering: the exchange moves (source,
-                # id, url) keys, the 2 KB rendered graph is born already
-                # clustered, and the sink write adds no shuffle of its own.
-                # Same cluster width as the documents sink: render + sha1
-                # parallelism per source tracks the cores its share of
-                # the run deserves instead of a flat 4 lanes.
-                prov = hv.prov_table(docs_only, sources, bucket, run_date,
-                                     cluster_files=cfiles)
-                lake.table("prov").append(prov, run_id=run_id,
-                                          partition_by=["source_name"],
-                                          files_per_partition=0)
+                hv.append_prov(lake, processed, sources, bucket, run_date,
+                               run_id, cfiles)
             _mark("prov", _t)
 
             # join the overlapped sketch checkpoint before the marker:
@@ -447,12 +391,6 @@ def run_harvest(
                 }],
                 run_id=run_id,
             )
-        finally:
-            # a mid-phase-2 crash (the exact failure the torn-run
-            # rollback recovers from) must not leak the persisted
-            # frame in a long-lived session (ADVICE r4); the
-            # streaming twin in incremental.py already does this
-            processed.unpersist()
     else:
         # resume of an ALREADY-COMMITTED run: the marker durably
         # recorded the real counts — report those instead of zeros

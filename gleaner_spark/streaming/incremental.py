@@ -7,13 +7,13 @@ frontier ``state`` column. This module adds the natural Spark
 extension: new page snapshots landing in a directory are harvested
 incrementally with ``Trigger.AvailableNow`` semantics.
 
-The micro-batch body is a faithful twin of ``run_harvest`` phase 2 —
-it reuses the SAME fused extract/process kernel, the same dedup
-anti-join, the same documents/prov table builders, and the same
-robots evaluator, so the streaming lake and a batch harvest of the
-identical pages are table-equal (documents and prov; pinned by the
-differential suite in tests/test_streaming_differential.py). The
-mapping from a page drop to phase-2 inputs:
+The micro-batch body is an adapter over the shared phase-2 kernel in
+``operators/harvest.py`` (``processed_pages``, ``append_new_documents``,
+``append_prov``) — the same code ``run_harvest`` calls — so the
+streaming lake and a batch harvest of the identical pages are
+table-equal (documents and prov; pinned by the differential suite in
+tests/test_streaming_differential.py). The adapter only maps a page
+drop to phase-2 inputs:
 
 - source attribution: the frontier derives it from sitemap ownership;
   a page drop has no sitemap, so attribution is the host → source
@@ -25,6 +25,9 @@ mapping from a page drop to phase-2 inputs:
   WARC-derived stream) so the shared-identifier tie-break picks the
   same winner as the batch pipeline; across micro-batches the earlier
   batch wins by the lake seen-set, which matches too.
+- run_id: scoped to the checkpoint lineage (``_stream_run_id``), and
+  every append is skipped when its run_id already published, so a
+  replayed batch adds no rows twice.
 
 100-TB shape: each micro-batch shuffles only its own pages; the dedup
 anti-join prunes via the lake seen projection (columnar, two columns
@@ -41,6 +44,15 @@ from pyspark.sql import functions as F
 
 from ..plans.lake import Lake
 from ..sources.config import Source
+
+
+def _stream_run_id(query_id: str, batch_id: int) -> str:
+    """``stream-<lineage>-<batch_id>``, the run_id of a micro-batch's
+    appends. The lineage is the query's persistent id, which Spark
+    keeps in the checkpoint: a new checkpoint restarts batch ids with
+    different content, and gets a new id even when it is recreated at
+    the same path."""
+    return f"stream-{query_id.replace('-', '')[:12]}-{batch_id}"
 
 
 def _ordered_positions(pages):
@@ -110,7 +122,6 @@ def incremental_harvest(
     )
 
     src_rows = [(s.domain, s.name) for s in sources if s.active and s.domain]
-    hw = {s.name: s.headless_wait for s in sources}
 
     # the SAME host keying as the fused frontier (_host_of): tolerant
     # of hosts java.net.URI rejects, and never throws — F.parse_url
@@ -127,39 +138,36 @@ def incremental_harvest(
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        if maintain_index:
+        run_id = _stream_run_id(
+            sp.sparkContext.getLocalProperty("sql.streaming.queryId"),
+            batch_id,
+        )
+
+        # at-least-once guard: foreachBatch can replay a batch_id after
+        # a partial failure. Within one checkpoint lineage a replayed
+        # batch carries identical content (Spark's contract), so an
+        # append whose run_id already published is skipped: a second
+        # capture-index append would double those keys' n_captures in
+        # every recrawl estimate, a second prov append would duplicate
+        # its rows
+        def unpublished(table: str) -> bool:
+            return not any(
+                s.get("run_id") == run_id
+                for s in lake.table(table).snapshots()
+            )
+
+        if maintain_index and unpublished("url_index"):
             from ..operators.urlindex import build_capture_index
 
-            # at-least-once guard: foreachBatch can replay a batch_id
-            # after a partial failure, and unlike the documents path
-            # (seen anti-join + dataless-snapshot refusal) a second
-            # capture-index append would double those keys' n_captures
-            # in every recrawl estimate. The manifest records run_id,
-            # so a replayed batch whose index snapshot already
-            # published is a no-op. The id is CHECKPOINT-scoped, not
-            # bare batch_id: within one checkpoint lineage a replayed
-            # batch_id carries identical content (Spark's contract),
-            # but a FRESH checkpoint over the same lake restarts batch
-            # numbering with different content — a bare-id guard would
-            # silently drop those captures.
-            import hashlib
-
-            ckpt_h = hashlib.sha1(
-                checkpoint_dir.encode("utf-8")
-            ).hexdigest()[:8]
-            idx_table = lake.table("url_index")
-            idx_run = f"stream-{ckpt_h}-{batch_id}"
-            already = any(
-                s.get("run_id") == idx_run for s in idx_table.snapshots()
+            # zero-exchange projection of the raw drop; coalesce caps
+            # the small-file growth of a long-lived stream at 2
+            # files/batch (narrow dependency, no shuffle)
+            lake.table("url_index").append(
+                build_capture_index(batch_df).coalesce(2), run_id=run_id,
             )
-            if not already:
-                # zero-exchange projection of the raw drop; coalesce
-                # caps the small-file growth of a long-lived stream at
-                # 2 files/batch (narrow dependency, no shuffle)
-                idx_table.append(
-                    build_capture_index(batch_df).coalesce(2),
-                    run_id=idx_run,
-                )
+        docs_due, prov_due = unpublished("documents"), unpublished("prov")
+        if not (docs_due or prov_due):
+            return
         pages = batch_df.withColumn("host", _host_udf(F.col("url")))
         src_df = sp.createDataFrame(src_rows, "host string, source_name string")
         pages = pages.join(F.broadcast(src_df), "host", "inner")
@@ -169,62 +177,15 @@ def incremental_harvest(
         fetched = _ordered_positions(pages).select(
             "source_name", "url", "position", "html", "text", "content_type"
         )
-
-        processed = hv.extract_and_process(
-            fetched, sources, hw, global_strict, context_maps=context_maps,
-            emit_raw=False,
-        ).persist()
-        try:
-            docs_only = processed.filter(F.col("doc_idx") >= 0)
-            seen_src = lake.table("documents").read(sp)
-            seen = (
-                seen_src.select("source_name", "unique_id")
-                if seen_src is not None else None
-            )
-            # a valid batch-pipeline sketch checkpoint prunes the
-            # shuffle; streaming appends invalidate it (lineage guard)
-            # so later batches fall back to the plain anti-join
-            sk_entry = hv.load_seen_sketch(lake)
-            sketch = (
-                sk_entry[0]
-                if seen is not None and sk_entry is not None
-                and sk_entry[1] <= sk_entry[2]
-                else None
-            )
-            new_docs = hv.dedup_new_documents(
-                sp, docs_only.drop("jsonld", "page_bytes", "page_first"),
-                seen, sketch=sketch,
-            )
-            docs_out = hv.documents_table(new_docs)
-            # single-pass write, batch-pipeline pattern: the old
-            # limit(1).count() emptiness probe ran the whole dedup
-            # plan a second time per micro-batch. One append suffices:
-            # the lake refuses to publish dataless snapshots, so an
-            # all-dup batch leaves the manifest untouched with no
-            # retract step (and no publish-then-retract crash window).
-            # dedup output is already (key-segment, salt)-clustered
-            # (harvest._first_per_key fusion), so the partitioned
-            # write adds no shuffle of its own.
-            lake.table("documents").append(
-                docs_out, run_id=f"stream-{batch_id}",
-                partition_by=["source_name"],
-                files_per_partition=0,
-            )
-            # prov re-emits for every processed doc each run — the
-            # reference quirk (jsonutils.go:378); per micro-batch here
-            # narrow-first clustering, same as batch phase 2: shuffle
-            # the keys, render the 2 KB graph post-exchange, no sink
-            # shuffle (micro-batches are small — 2 files/source caps
-            # the per-batch small-file growth of a long-lived stream)
-            prov = hv.prov_table(docs_only, sources, bucket, run_date,
-                                 cluster_files=2)
-            lake.table("prov").append(
-                prov, run_id=f"stream-{batch_id}",
-                partition_by=["source_name"],
-                files_per_partition=0,
-            )
-        finally:
-            processed.unpersist()
+        # micro-batches are small: 2 files/source caps the per-batch
+        # small-file growth of a long-lived stream in both sinks
+        with hv.processed_pages(fetched, sources, global_strict,
+                                context_maps) as processed:
+            if docs_due:
+                hv.append_new_documents(sp, lake, processed, run_id, 2)
+            if prov_due:
+                hv.append_prov(lake, processed, sources, bucket, run_date,
+                               run_id, 2)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -584,6 +584,22 @@ class TestMultimodal:
         row = plan.groupBy("media_id").count().collect()
         assert row  # videos produce frame rows
 
+    def test_multimodal_features_query_without_arrow(self, spark):
+        """Queries must also run with Arrow off: on that path pandas
+        None-bearing int lists (float64 NaN) are rejected by the
+        IntegerType/LongType media columns."""
+        import __spark_entry__ as m
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            rows = m.queries()["multimodal_features"](spark, None).collect()
+        finally:
+            spark.conf.set(key, prev)
+        assert len(rows) == 64
+        assert all(len(r["feature_q"].split(",")) == 16 for r in rows)
+
     @staticmethod
     def _tiny_png(pixels: bytes = bytes([0, 64, 128, 255])) -> bytes:
         """Hand-rolled 2x2 grayscale PNG (stdlib only) so the real

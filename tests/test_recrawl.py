@@ -212,6 +212,29 @@ class TestSelectAndWeight:
         # unranked host: floored at min(rank) = 0.1, not dropped/zeroed
         assert got["org,unranked)/z"]["weighted_priority"] == round(base * 0.1, 9)
 
+    def test_duplicate_rank_rows_do_not_duplicate_urls(self, spark):
+        """A rank frame with repeated host_key rows (e.g. a --ranks
+        parquet concatenated from two runs) must not fan out the left
+        join: each URL stays one row, weighted by the max rank."""
+        df = _caps(spark, [
+            ("org,big)/x", 1000, "d1"), ("org,big)/x", 2000, "d2"),
+            ("org,big)/w", 1000, "d1"),
+            ("org,small)/y", 1000, "d1"), ("org,small)/y", 2000, "d2"),
+        ])
+        ranks = spark.createDataFrame(
+            [("org,big", 0.6), ("org,big", 0.4), ("org,big", 0.6),
+             ("org,small", 0.1)],
+            "host_key string, rank double",
+        )
+        pri = recrawl_priority(df, 10_000)
+        rows = weight_by_host_rank(pri, ranks).collect()
+        assert sorted(r["surt_key"] for r in rows) == [
+            "org,big)/w", "org,big)/x", "org,small)/y"
+        ]
+        got = {r["surt_key"]: r for r in rows}
+        base = got["org,big)/x"]["priority"]
+        assert got["org,big)/x"]["weighted_priority"] == round(base * 0.6, 9)
+
     def test_composes_with_capture_index(self, spark):
         """End-to-end over build_capture_index output: pages ->
         per-capture index -> priorities (the production wiring)."""

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -152,15 +153,17 @@ def test_streaming_index_maintenance_feeds_recrawl(spark, tmp_lake, tmp_path, ca
 
 def test_streaming_index_replay_guard(spark, tmp_lake, tmp_path):
     """At-least-once replays must not double capture counts: a batch
-    whose checkpoint-scoped index snapshot already published is
-    skipped, while a FRESH checkpoint (new lineage, restarted batch
-    ids) still appends."""
-    import hashlib
+    whose lineage-scoped index snapshot already published is skipped,
+    while a FRESH checkpoint (new lineage, restarted batch ids) still
+    appends."""
     import tempfile
 
     from gleaner_spark.plans.lake import Lake
     from gleaner_spark.sources import corpus
-    from gleaner_spark.streaming.incremental import incremental_harvest
+    from gleaner_spark.streaming.incremental import (
+        _stream_run_id,
+        incremental_harvest,
+    )
 
     stream_dir = tempfile.mkdtemp(prefix="gleaner-replay-")
     ckpt = tempfile.mkdtemp(prefix="gleaner-replay-ckpt-")
@@ -174,12 +177,11 @@ def test_streaming_index_replay_guard(spark, tmp_lake, tmp_path):
     assert idx.read(spark).count() == 20
     # inject "the replayed batch's append already committed": the next
     # batch on THIS checkpoint will be batch 1 — pre-publish its run_id
-    h = hashlib.sha1(ckpt.encode()).hexdigest()[:8]
     from datetime import datetime
     idx.append_local(
         [{"surt_key": "org,marker)/x", "ts": datetime(2024, 1, 1),
           "url": "m", "digest": "d"}],
-        run_id=f"stream-{h}-1",
+        run_id=_stream_run_id(q.id, 1),
     )
     corpus.build_pages(spark, 20, partitions=1).write.mode("append") \
         .parquet(stream_dir)
@@ -197,6 +199,83 @@ def test_streaming_index_replay_guard(spark, tmp_lake, tmp_path):
                              stream_dir, ckpt2, maintain_index=True)
     q3.awaitTermination(120)
     assert lake2.table("url_index").read(spark).count() == 40
+
+
+def _two_drops(spark, base):
+    """Pages 0-19 and 20-39 of the synthetic corpus as two one-file
+    parquet drops (different captures, so different index rows)."""
+    import datetime as dt
+
+    from gleaner_spark.sources import corpus
+
+    pages = corpus.build_pages(spark, 40, partitions=1)
+    early = F.col("warc_ts") < F.lit(corpus._EPOCH + dt.timedelta(seconds=20))
+    dirs = [str(base / "drop-a"), str(base / "drop-b")]
+    pages.filter(early).write.parquet(dirs[0])
+    pages.filter(~early).write.parquet(dirs[1])
+    return dirs
+
+
+def test_streaming_checkpoint_recreated_at_same_path_lands(spark, tmp_lake, tmp_path):
+    """A checkpoint wiped and recreated at the SAME path is a new
+    lineage: its batch ids restart at 0 with different content, and
+    its appends must still land (a guard keyed on the checkpoint path
+    skipped them)."""
+    import shutil
+
+    from gleaner_spark.plans.lake import Lake
+    from gleaner_spark.sources import corpus
+    from gleaner_spark.streaming.incremental import incremental_harvest
+
+    ckpt = str(tmp_path / "ckpt")
+    lake = Lake(tmp_lake)
+    for drop_dir in _two_drops(spark, tmp_path):
+        shutil.rmtree(ckpt, ignore_errors=True)
+        q = incremental_harvest(spark, lake, corpus.build_sources(),
+                                drop_dir, ckpt, maintain_index=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+    assert lake.table("url_index").read(spark).count() == 40
+    runs = {s["run_id"] for s in lake.table("documents").snapshots()}
+    assert len(runs) == 2 and all(r.startswith("stream-") for r in runs)
+
+
+def test_streaming_replayed_batch_adds_no_prov(spark, tmp_lake, tmp_path):
+    """A replayed batch whose PROV append already published adds no
+    PROV rows (a guard on the capture index alone let a replay append
+    PROV twice)."""
+    import shutil
+
+    from gleaner_spark.plans.lake import Lake
+    from gleaner_spark.sources import corpus
+    from gleaner_spark.streaming.incremental import (
+        _stream_run_id,
+        incremental_harvest,
+    )
+
+    first, second = _two_drops(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    lake = Lake(tmp_lake)
+    q = incremental_harvest(spark, lake, corpus.build_sources(), first, ckpt)
+    q.awaitTermination(120)
+    prov = lake.table("prov")
+    n_prov = prov.read(spark).count()
+    assert n_prov > 0
+    # batch 1 of this lineage "already published its PROV": a one-row
+    # snapshot under its run_id stands in for the first attempt
+    marker = prov.read(spark).limit(1).toPandas().to_dict("records")
+    prov.append_local(marker, run_id=_stream_run_id(q.id, 1))
+    # the next drop lands in the watched directory as batch 1
+    for name in os.listdir(second):
+        if name.endswith(".parquet"):
+            shutil.copy(os.path.join(second, name), os.path.join(first, "b-" + name))
+    q2 = incremental_harvest(spark, lake, corpus.build_sources(), first, ckpt)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert prov.read(spark).count() == n_prov + 1
+    # batch 1's documents had not published, so they still land
+    runs = [s["run_id"] for s in lake.table("documents").snapshots()]
+    assert _stream_run_id(q.id, 1) in runs
 
 
 def test_cli_recrawl_selected_reports_true_cut_size(spark, tmp_path, capsys):
