@@ -18,3 +18,7 @@ internetofwater/gleaner (Go) as an idiomatic Spark engine:
 """
 
 __version__ = "0.1.0"
+
+from . import _zipcache
+
+_zipcache.install()

@@ -486,18 +486,6 @@ def read_documents(spark: SparkSession, lake: Lake) -> DataFrame | None:
     return lake.table("documents").read(spark)
 
 
-def read_orgs_latest(spark: SparkSession, lake: Lake) -> DataFrame | None:
-    """Org objects are overwritten per run: latest snapshot wins."""
-    t = lake.table("orgs")
-    snap = t.latest_snapshot()
-    if snap is None:
-        return None
-    df = t.read(spark)
-    return df.filter(F.lit(True)) if df is None else spark.read.parquet(
-        f"{t.dir}/{snap['data_dir']}"
-    )
-
-
 def harvest_from_config(spark: SparkSession, lake: Lake, cfg: GleanerConfig,
                         pages: DataFrame, sitemap_bodies: dict[str, str],
                         robots_bodies: dict[str, str], **kw) -> HarvestResult:
