@@ -19,6 +19,6 @@ internetofwater/gleaner (Go) as an idiomatic Spark engine:
 
 __version__ = "0.1.0"
 
-from . import _zipcache
+from . import _worker
 
-_zipcache.install()
+_worker.install()

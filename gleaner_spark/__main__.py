@@ -38,7 +38,7 @@ import time
 
 from .plans.lake import Lake
 from .plans.pipeline import harvest_from_config
-from .session import build_session
+from .session import build_session, local_frame
 from .sources.config import load_config
 
 
@@ -550,8 +550,8 @@ def _recrawl_main(argv: list[str]) -> int:
             sm_bodies = json.load(f).get("sitemaps", {})
         claims = claims_from_sitemaps(sm_bodies)
         if claims:
-            claims_df = spark.createDataFrame(
-                claims, "surt_key string, lastmod_ts long"
+            claims_df = local_frame(
+                spark, claims, "surt_key string, lastmod_ts long"
             )
             # known-stale URLs first, then by whichever priority col
             # is active — the boost carries the rank-weighted column
@@ -589,8 +589,8 @@ def _recrawl_main(argv: list[str]) -> int:
                 robots_bodies = json.load(f).get("robots", {})
             rows = delays_from_robots(robots_bodies)
             delays_df = (
-                spark.createDataFrame(
-                    rows, "host_key string, delay_s double"
+                local_frame(
+                    spark, rows, "host_key string, delay_s double"
                 ) if rows else None
             )
         elif args.delays:

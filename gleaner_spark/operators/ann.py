@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
+
 def _as_double(vec_col):
     return F.transform(vec_col, lambda x: x.cast("double"))
 
@@ -85,8 +88,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     )
     if not q_rows:
         spark = embeddings.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, nbr_id long, rank integer, cos double"
+        return local_frame(
+            spark, [], "query_id long, nbr_id long, rank integer, cos double"
         )
     q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
     q_mat = _norm_rows(np.array([r["qv"] for r in q_rows], dtype=np.float64))

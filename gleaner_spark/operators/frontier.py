@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from ..core import robots as rb
 from ..core import sitemap as sm
 from ..core.extract import EARTHCUBE_AGENT
+from ..session import local_frame
 from ..sources.config import Source, SummonerConfig
 
 SITEMAP_ENTRY_SCHEMA = T.StructType(
@@ -308,8 +309,8 @@ def build_frontier(
             source_delay = rb.resolve_crawl_delay_ms(grp.crawl_delay, summoner.delay_ms)
         threads, delay = effective_politeness(summoner.threads, summoner.delay_ms, source_delay)
         politeness[s.name] = (threads, delay)
-    pol_df = spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in politeness.items()],
+    pol_df = local_frame(
+        spark, [(k, v[0], v[1]) for k, v in politeness.items()],
         "source_name string, threads int, delay_ms long",
     )
 

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -245,37 +247,26 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
 
 
 def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for tests/bench. Built as a
-    pandas frame so createDataFrame takes the Arrow fast path: a
-    list-of-tuples frame is parallelize()-backed, which re-runs a
-    pickled python deserializer task per partition on EVERY action
-    (~1.6 s per count() for 64 rows vs 0.2 s for a JVM-local scan —
-    pure harness overhead that dwarfs the decode work under test).
-    Coalesced to ~16 rows/partition to bound task fan-out."""
+    """Deterministic fake media table for tests/bench, as a
+    ``LocalRelation`` (``session.local_frame``): a list-of-tuples frame
+    is parallelize()-backed, which re-runs a pickled python deserializer
+    task per partition on EVERY action (~1.6 s per count() for 64 rows
+    vs 0.2 s for a JVM-local scan — pure harness overhead that dwarfs
+    the decode work under test). Coalesced to ~16 rows/partition to
+    bound task fan-out."""
     kinds = ["image", "audio", "video"]
-    rows = {
-        "media_id": [], "kind": [], "payload": [], "content_type": [],
-        "width": [], "height": [], "duration_ms": [],
-    }
+    rows = []
     for i in range(n):
         kind = kinds[i % 3]
-        payload = hashlib.sha256(f"media-{i}".encode()).digest() * (1 + i % 4)
-        rows["media_id"].append(i)
-        rows["kind"].append(kind)
-        rows["payload"].append(payload)
-        rows["content_type"].append(f"{kind}/x-synthetic")
-        rows["width"].append(64 + i % 128 if kind == "image" else None)
-        rows["height"].append(64 + i % 64 if kind == "image" else None)
-        rows["duration_ms"].append(
-            (1000 * (1 + i % 10)) if kind != "image" else None
-        )
-    # object columns keep Python ints and None: a plain list with None
-    # becomes float64 (and so does a nullable Int32 array in the
-    # records the non-Arrow createDataFrame path builds), which the
-    # int schema columns reject
-    for col in ("width", "height", "duration_ms"):
-        rows[col] = pd.Series(rows[col], dtype=object)
-    pdf = pd.DataFrame(rows)
-    return spark.createDataFrame(pdf, MEDIA_SCHEMA).coalesce(
+        rows.append((
+            i,
+            kind,
+            hashlib.sha256(f"media-{i}".encode()).digest() * (1 + i % 4),
+            f"{kind}/x-synthetic",
+            64 + i % 128 if kind == "image" else None,
+            64 + i % 64 if kind == "image" else None,
+            (1000 * (1 + i % 10)) if kind != "image" else None,
+        ))
+    return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(
         max(2, n // 16)
     )

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..operators.components import dedup_clusters
 from ..operators.dedup import exact_duplicates, minhash_lsh_dedup
+from ..session import local_frame
 from .lake import Lake
 
 DOC_ID_SEP = "\x1f"
@@ -236,11 +237,11 @@ def run_corpus_dedup(
     exact_groups = (
         exact_snap.select("content_hash", "keeper_id")
         if exact_snap is not None
-        else spark.createDataFrame([], "content_hash string, keeper_id string")
+        else local_frame(spark, [], "content_hash string, keeper_id string")
     )
     near_pairs = (
         near_snap.select("id_a", "id_b") if near_snap is not None
-        else spark.createDataFrame([], "id_a string, id_b string")
+        else local_frame(spark, [], "id_a string, id_b string")
     )
     clusters = cluster_documents(docs, exact_groups, near_pairs, keeper=keeper)
     clusters_entry = lake.table("dup_clusters").append(

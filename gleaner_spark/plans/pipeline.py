@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..core.prov import org_nquads
 from ..operators import harvest as hv
 from ..operators.frontier import build_frontier, schedule_fetches
+from ..session import local_frame
 from ..sources.config import GleanerConfig, Source, SummonerConfig
 from .lake import Lake
 
@@ -478,7 +479,7 @@ def _staged_fetches(spark: SparkSession, ft, run_id: str) -> DataFrame:
             list(LIVE_FETCH_SCHEMA.fields)
             + [T.StructField("run_id", T.StringType())]
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return df.filter(F.col("run_id") == run_id)
 
 

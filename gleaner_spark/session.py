@@ -11,8 +11,10 @@ cores and let AQE coalesce.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def build_session(app_name: str = "gleaner-spark", master: str | None = None,
@@ -38,3 +40,28 @@ def build_session(app_name: str = "gleaner-spark", master: str | None = None,
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: str | StructType) -> DataFrame:
+    """A small driver-side relation (rows of Python values, DDL or
+    StructType schema) as an Arrow ``LocalRelation``.
+
+    ``createDataFrame(<list>)`` is ``parallelize``-backed, so every scan
+    of it — a broadcast-join side included — runs Python tasks in
+    workers that never import this package. A pandas frame takes that
+    same path when it is empty or Arrow is off. A pyarrow Table takes
+    the Arrow path in every case: the rows live in the plan, and
+    scanning or broadcasting them runs JVM tasks only."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

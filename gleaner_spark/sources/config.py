@@ -19,6 +19,8 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 JSON_SHA = "jsonsha"
 
 
@@ -194,7 +196,7 @@ def sources_df(spark: SparkSession, sources: list[Source]) -> DataFrame:
         )
         for s in sources
     ]
-    return spark.createDataFrame(rows, SOURCE_SCHEMA)
+    return local_frame(spark, rows, SOURCE_SCHEMA)
 
 
 def filter_sources_by_type(df: DataFrame, requested_type: str) -> DataFrame:

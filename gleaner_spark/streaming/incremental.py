@@ -43,6 +43,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.lake import Lake
+from ..session import local_frame
 from ..sources.config import Source
 
 
@@ -169,7 +170,7 @@ def incremental_harvest(
         if not (docs_due or prov_due):
             return
         pages = batch_df.withColumn("host", _host_udf(F.col("url")))
-        src_df = sp.createDataFrame(src_rows, "host string, source_name string")
+        src_df = local_frame(sp, src_rows, "host string, source_name string")
         pages = pages.join(F.broadcast(src_df), "host", "inner")
         if not rude and robots_bodies:
             allowed = _robots_filter_udf(robots_bodies)

@@ -1,4 +1,4 @@
-"""The stat-guarded zip-directory re-read (``gleaner_spark._zipcache``).
+"""The stat-guarded zip-directory re-read (``gleaner_spark._worker``).
 
 PySpark workers call ``importlib.invalidate_caches()`` once per task; on
 CPython 3.11 that re-read every zip on ``sys.path`` (pyspark.zip, py4j, the
@@ -93,7 +93,7 @@ def _worker_rereads(spark) -> dict[int, tuple[int, bool, bool]]:
 
         import pandas as pd
 
-        from gleaner_spark import _zipcache
+        from gleaner_spark import _worker
 
         for _ in batches:
             pass
@@ -101,7 +101,7 @@ def _worker_rereads(spark) -> dict[int, tuple[int, bool, bool]]:
         importlib.util.find_spec("zc_no_such_module")
         yield pd.DataFrame({
             "pid": [os.getpid()],
-            "rereads": [_zipcache.rereads],
+            "rereads": [_worker.rereads],
             "guarded": [getattr(zipimport.zipimporter.invalidate_caches,
                                 "_stat_guarded", False)],
             "shipped": [any(p.endswith("gleaner_spark.zip")

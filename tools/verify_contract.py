@@ -1,7 +1,10 @@
 """Local mimic of the driver's correctness gate: run each
 queries()[name] in Spark and oracle_sql()[name] in DuckDB on the same
 sf dir; compare row count, column names, and an order-insensitive
-value hash. Usage: python tools/verify_contract.py [sf_dir] [names…]"""
+value hash. Usage: python tools/verify_contract.py [--no-arrow] [sf_dir]
+[names…]. ``--no-arrow`` sets
+``spark.sql.execution.arrow.pyspark.enabled=false``, so the queries take
+the non-Arrow ``createDataFrame``/``toPandas`` path."""
 
 from __future__ import annotations
 
@@ -47,6 +50,9 @@ def table_hash(rows, colnames):
 
 
 def main():
+    no_arrow = "--no-arrow" in sys.argv
+    if no_arrow:
+        sys.argv.remove("--no-arrow")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -54,6 +60,8 @@ def main():
     from gleaner_spark.session import build_session
 
     spark = build_session("verify-contract", master="local[8]", shuffle_partitions=8)
+    if no_arrow:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
 
     con = duckdb.connect()
     for t in TABLES:
