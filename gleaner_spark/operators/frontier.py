@@ -100,41 +100,54 @@ def resolve_sitemap_docs(
     return docs, errors
 
 
-def sitemap_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, str]]) -> DataFrame:
-    """Executor-side XML parse preserving document order.
-
-    One sitemap doc per RDD slice, so the (multi-MB) XML bodies go
-    driver→executor exactly once — the old ``repartition`` guaranteed
-    the same one-doc-per-task spread but paid a full shuffle of the
-    XML blobs to get it (profiled at sf0.1: the exchange was ~15% of
-    the frontier phase). Parse parallelism == number of sitemap docs
-    by construction (at CC scale, thousands; the spec caps one doc at
-    50k URLs so a task is bounded)."""
-    schema = "source_name string, sitemap_url string, sitemap_seq int, xml string"
-    doc_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(docs or [], max(len(docs), 1)), schema
-    )
+def _map_sitemap_docs(spark: SparkSession, docs: list[tuple[str, str, int, str]],
+                      parse_doc, schema: T.StructType) -> DataFrame:
+    """One task per sitemap doc, and no Python job to ship the docs:
+    the XML bodies go out as ONE broadcast (torrent, cached per
+    executor) and each task reads its doc by index from a
+    ``spark.range``. Task-embedded payloads would ride every task of
+    every branch that re-runs the parse (the frontier's offsets
+    subquery does), and a ``parallelize``-built relation runs an extra
+    Python task per scan. Parse parallelism == number of sitemap docs
+    (at CC scale, thousands; the spec caps one doc at 50k URLs so a
+    task is bounded). ``parse_doc(doc, out)`` appends one doc's rows
+    to ``out``, a dict of column lists keyed by ``schema``'s fields."""
+    docs = docs or []
+    bdocs = spark.sparkContext.broadcast(docs)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        all_docs = bdocs.value
         for pdf in batches:
-            out = {k: [] for k in SITEMAP_ENTRY_SCHEMA.fieldNames()}
-            for _, row in pdf.iterrows():
-                try:
-                    urls = sm.parse_sitemap(row["xml"])
-                except sm.SitemapParseError:
-                    continue  # MultiError semantics: log & continue
-                for pos, u in enumerate(urls):
-                    out["source_name"].append(row["source_name"])
-                    out["sitemap_url"].append(row["sitemap_url"])
-                    out["sitemap_seq"].append(row["sitemap_seq"])
-                    out["loc"].append(u.loc)
-                    out["lastmod"].append(u.lastmod)
-                    out["changefreq"].append(u.changefreq)
-                    out["priority"].append(u.priority)
-                    out["doc_pos"].append(pos)
+            out = {k: [] for k in schema.fieldNames()}
+            for i in pdf["id"]:
+                parse_doc(all_docs[int(i)], out)
             yield pd.DataFrame(out)
 
-    return doc_df.mapInPandas(parse, SITEMAP_ENTRY_SCHEMA)
+    idx_df = spark.range(len(docs), numPartitions=max(len(docs), 1))
+    return idx_df.mapInPandas(parse, schema)
+
+
+def sitemap_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, str]]) -> DataFrame:
+    """Executor-side XML parse preserving document order, one task per
+    sitemap doc (``_map_sitemap_docs``)."""
+
+    def parse_doc(doc: tuple[str, str, int, str], out: dict[str, list]) -> None:
+        source_name, sitemap_url, sitemap_seq, xml = doc
+        try:
+            urls = sm.parse_sitemap(xml)
+        except sm.SitemapParseError:
+            return  # MultiError semantics: log & continue
+        for pos, u in enumerate(urls):
+            out["source_name"].append(source_name)
+            out["sitemap_url"].append(sitemap_url)
+            out["sitemap_seq"].append(sitemap_seq)
+            out["loc"].append(u.loc)
+            out["lastmod"].append(u.lastmod)
+            out["changefreq"].append(u.changefreq)
+            out["priority"].append(u.priority)
+            out["doc_pos"].append(pos)
+
+    return _map_sitemap_docs(spark, docs, parse_doc, SITEMAP_ENTRY_SCHEMA)
 
 
 def _robots_filter_udf(robots_by_host: dict[str, str]):
@@ -226,46 +239,34 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
             _groups[host] = grp
         return True if grp is None else grp.test(url)
 
-    # the XML bodies ship as ONE broadcast (torrent, cached per
-    # executor) instead of riding every task of every branch — the
-    # offsets subquery and the main query each re-run this stage, so
-    # task-embedded payloads would ship the corpus twice per action
-    bdocs = spark.sparkContext.broadcast(docs or [])
+    def parse_doc(doc: tuple[str, str, int, str], out: dict[str, list]) -> None:
+        source_name, _sitemap_url, sitemap_seq, xml = doc
+        try:
+            urls = sm.parse_sitemap(xml)
+        except sm.SitemapParseError:
+            return  # MultiError semantics: log & continue
+        start = len(out["url"])
+        lr = 0
+        for u in urls:
+            # S10 via the SHARED normalizer — recrawl claims key on
+            # the same function, so the two can never diverge on what
+            # a loc normalizes to
+            norm = sm.normalize_loc(u.loc)
+            if not norm:
+                continue
+            host = _host_of(norm)
+            if not _allowed(norm, host):
+                continue
+            lr += 1
+            out["source_name"].append(source_name)
+            out["sitemap_seq"].append(sitemap_seq)
+            out["url"].append(norm)
+            out["host"].append(host)
+            out["lr"].append(lr)
+            out["cnt"].append(0)
+        out["cnt"][start:] = [lr] * (len(out["url"]) - start)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_docs = bdocs.value
-        for pdf in batches:
-            out = {k: [] for k in FRONTIER_ENTRY_SCHEMA.fieldNames()}
-            for i in pdf["id"]:
-                source_name, _sitemap_url, sitemap_seq, xml = all_docs[int(i)]
-                try:
-                    urls = sm.parse_sitemap(xml)
-                except sm.SitemapParseError:
-                    continue  # MultiError semantics: log & continue
-                start = len(out["url"])
-                lr = 0
-                for u in urls:
-                    # S10 via the SHARED normalizer — recrawl claims
-                    # key on the same function, so the two can never
-                    # diverge on what a loc normalizes to
-                    norm = sm.normalize_loc(u.loc)
-                    if not norm:
-                        continue
-                    host = _host_of(norm)
-                    if not _allowed(norm, host):
-                        continue
-                    lr += 1
-                    out["source_name"].append(source_name)
-                    out["sitemap_seq"].append(sitemap_seq)
-                    out["url"].append(norm)
-                    out["host"].append(host)
-                    out["lr"].append(lr)
-                    out["cnt"].append(0)
-                out["cnt"][start:] = [lr] * (len(out["url"]) - start)
-            yield pd.DataFrame(out)
-
-    idx_df = spark.range(len(docs or []), numPartitions=max(len(docs or []), 1))
-    return idx_df.mapInPandas(parse, FRONTIER_ENTRY_SCHEMA)
+    return _map_sitemap_docs(spark, docs, parse_doc, FRONTIER_ENTRY_SCHEMA)
 
 
 def build_frontier(

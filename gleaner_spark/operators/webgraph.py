@@ -172,7 +172,10 @@ def host_rank(
     # lineage truncated per round with eager localCheckpoint — the
     # operators/components.py pattern (no persist bookkeeping to
     # leak; on a real cluster with flaky executors set a checkpoint
-    # dir and swap in .checkpoint())
+    # dir and swap in .checkpoint()). ``edges`` first: callers pass
+    # the un-materialized link extraction, which hosts, outdeg and
+    # every round would otherwise re-run over the pages.
+    edges = edges.localCheckpoint(eager=True)
     hosts = (
         edges.select(F.col("src_host").alias("host"))
         .unionByName(edges.select(F.col("dst_host").alias("host")))

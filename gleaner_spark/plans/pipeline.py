@@ -28,6 +28,9 @@ from ..session import local_frame
 from ..sources.config import GleanerConfig, Source, SummonerConfig
 from .lake import Lake
 
+# frontiers up to this many rows ship to the fetch join as a broadcast
+BROADCAST_FRONTIER_MAX_ROWS = 500_000
+
 
 @dataclass
 class HarvestResult:
@@ -57,7 +60,6 @@ def run_harvest(
     rude: bool = False,
     global_strict: bool = False,
     resume: bool = False,
-    broadcast_frontier_max_rows: int = 500_000,
     context_maps: dict[str, dict] | None = None,
     fetch_mode: str = "pages",
     live_url_rewrite=None,
@@ -274,7 +276,7 @@ def run_harvest(
         else:
             fetched = hv.fetch_pages(
                 frontier, pages,
-                broadcast_frontier=0 < res.frontier_size <= broadcast_frontier_max_rows,
+                broadcast_frontier=0 < res.frontier_size <= BROADCAST_FRONTIER_MAX_ROWS,
             )
         # Cluster width trades files against tasks: per source it is
         # both the max sink files AND the max dedup/write tasks, so size

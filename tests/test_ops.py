@@ -1142,6 +1142,26 @@ class TestFusedFrontier:
                 for r in ref.collect()}
         assert got == want and len(got) == 12  # 7 a-urls + 5 b-urls
 
+    def test_sitemap_entries_ship_docs_without_a_python_job(self, spark):
+        """sitemap_entries_df reads its docs the way the fused parse
+        does, from a spark.range plus one broadcast: no
+        parallelize-built (LogicalRDD / ExistingRDD) leaf."""
+        from gleaner_spark.core import sitemap as sm
+        from gleaner_spark.operators.frontier import (
+            resolve_sitemap_docs, sitemap_entries_df,
+        )
+        from gleaner_spark.sources import corpus
+
+        docs, _ = resolve_sitemap_docs(
+            corpus.build_sources(), corpus.build_sitemaps(40), corpus.build_robots()
+        )
+        entries = sitemap_entries_df(spark, docs)
+        qe = entries._jdf.queryExecution()
+        seq = qe.optimizedPlan().collectLeaves()
+        assert [seq.apply(i).nodeName() for i in range(seq.size())] == ["Range"]
+        assert "ExistingRDD" not in qe.executedPlan().toString()
+        assert entries.count() == sum(len(sm.parse_sitemap(d[3])) for d in docs)
+
     def test_fused_frontier_single_python_stage_no_full_exchange(self, spark):
         """Plan pin: the frontier build runs ONE Python stage and no
         full-frontier exchange (position comes from the broadcast

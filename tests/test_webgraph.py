@@ -179,3 +179,27 @@ class TestPageRank:
         assert len(got) == 4
         assert len(set(got.values())) == 1
         assert got["h0.example"] == pytest.approx(0.25, abs=1e-6)
+
+    def test_link_extraction_runs_once_per_page(self, spark):
+        """host_rank materializes ``edges`` once: whatever produces the
+        html runs once per page, not again for the host list, the
+        out-degrees and every round."""
+        import pandas as pd
+
+        evals = spark.sparkContext.accumulator(0)
+
+        @F.pandas_udf("string")
+        def html(ids: pd.Series) -> pd.Series:
+            evals.add(len(ids))
+            return ids.map(lambda i: f'<a href="https://h{(i + 1) % 7}.example/x">n</a>')
+
+        n_pages = 200
+        pages = spark.range(n_pages).select(
+            F.format_string("https://h%d.example/p%d", F.col("id") % 7,
+                            F.col("id")).alias("url"),
+            html("id").alias("html"),
+        )
+        ranks = page_rank_pipeline(pages, iterations=2).collect()
+        assert evals.value == n_pages
+        assert len(ranks) == 7
+

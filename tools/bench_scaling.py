@@ -3,16 +3,20 @@
 No real cluster exists in this sandbox, so per the driver protocol we
 run the SAME harvest job on the SAME pre-generated input at two
 parallelism levels in fresh JVMs, and report throughput at both plus
-efficiency = (rate_4N / rate_N) / 4.
+efficiency = (median rate_4N / median rate_N) / 4.
 
-Choice of N: the box advertises 32 vCPUs but is a *shared* VM — the
-host loadavg sits at ~6-8 with this container idle, and a pure-CPU
-fork/burn probe (run and recorded below) shows aggregate capacity of
-only ~3x when going 8→32 workers. 8-vs-32 therefore measures the
-neighbours, not the job. N=2 vs 4N=8 is a true 4x core ratio that
-fits inside the machine's linear region; the probe results are
-written into BENCH/BASELINE.md so the judge can see the machine's
-ceiling alongside the job's efficiency.
+Choice of N (SCALING_N): default 2, so 4N=8 stays inside the linear
+region of a shared box whose aggregate capacity flattens well before
+its advertised vCPU count; on a box with fewer than 8 CPUs the
+default drops to a quarter of them, since each level is pinned to
+exactly N / 4N CPUs. Two multiprocessing probes (CPU-bound and
+memory-bound) measure what the hardware itself delivers over the same
+window; their results are written into BENCH/BASELINE.md next to the
+job's efficiency.
+
+Every sample counts: no idle gate, no contention canary, no sample
+exclusion. Levels are interleaved so slow drift on a shared host hits
+both alike, and the median of all samples per level is the estimator.
 
 Writes BENCH/BASELINE.md. Usage:
     python tools/bench_scaling.py [n_pages] [runs]
@@ -31,7 +35,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-N_CORES = int(os.environ.get("SCALING_N", "2"))
+N_CORES = int(os.environ.get("SCALING_N", str(min(2, max(1, (os.cpu_count() or 8) // 4)))))
 N4_CORES = 4 * N_CORES
 
 
@@ -61,9 +65,8 @@ def capacity_probe(fn=_burn, levels=(1, 2, 4, 8, 16, 32)) -> dict[int, float]:
     """Aggregate parallel capacity (work units relative to 1 proc) for
     a given worker kernel. The CPU kernel (register busy-loop) shows
     the core-count ceiling; the memory kernel shows the shared-DRAM
-    ceiling — a data pipeline lands between them, and on this box the
-    two diverge sharply (the memory bus saturates near 5 streaming
-    cores while 32 vCPUs are advertised)."""
+    ceiling — a data pipeline lands between them, and on a shared box
+    the two can diverge sharply."""
     out = {}
     base = None
     for n in levels:
@@ -73,11 +76,6 @@ def capacity_probe(fn=_burn, levels=(1, 2, 4, 8, 16, 32)) -> dict[int, float]:
             base = sum(r) / len(r)
         out[n] = round(sum(r) / base, 2)
     return out
-
-
-def loadavg() -> str:
-    with open("/proc/loadavg") as f:
-        return f.read().split()[0]
 
 
 def generate_corpus(n_pages: int) -> str:
@@ -90,7 +88,7 @@ def generate_corpus(n_pages: int) -> str:
 import sys; sys.path.insert(0, {REPO!r})
 from gleaner_spark.session import build_session
 from gleaner_spark.sources import corpus
-spark = build_session("gen", master="local[32]")
+spark = build_session("gen")
 spark.sparkContext.setLogLevel("ERROR")
 corpus.build_pages(spark, {n_pages}, partitions=64).write.mode("overwrite").parquet({corpus_dir!r})
 """
@@ -98,76 +96,7 @@ corpus.build_pages(spark, {n_pages}, partitions=64).write.mode("overwrite").parq
     return corpus_dir
 
 
-def wait_for_idle(thresh: float, max_wait_s: float) -> None:
-    """Gate timed runs on an idle host window: neighbour load biases
-    every sample downward, so sampling when the host is quiet measures
-    the job instead of the neighbours. Capped so the benchmark always
-    completes."""
-    t0 = time.time()
-    while time.time() - t0 < max_wait_s:
-        if float(loadavg()) <= thresh:
-            return
-        time.sleep(15)
-
-
-_CANARY_SRC = """
-import time
-import numpy as np
-arr = np.arange(4 * 1024 * 1024, dtype=np.uint64)   # 32 MB buffer
-while True:
-    t0 = time.perf_counter()
-    for _ in range(4):
-        arr[::8].sum()                              # touch every cache line
-    print(f"{time.perf_counter() - t0:.6f}", flush=True)
-    time.sleep(3)
-"""
-
-
-class Canary:
-    """Mid-run DRAM-contention probe (attempt-3 lesson: the post-run
-    1-min loadavg misses *sustained moderate* neighbour load — run 1's
-    local[4] sample lost 37% throughput with load_before 0.91 and no
-    burst flag). A ~0.5%-duty-cycle strided-sum worker pinned to a core
-    OUTSIDE the job's pinned set times a fixed 128 MB memory sweep every
-    3 s for the duration of the run; neighbour DRAM pressure shows up
-    directly as sweep slowdown. The per-sample median sweep time is
-    published raw; flagging is relative to the same level's fastest
-    sample (the job itself also slows the canary, and does so more at
-    4N than at N, so cross-level comparisons would be biased)."""
-
-    def __init__(self, core: str):
-        self.proc = subprocess.Popen(
-            ["taskset", "-c", core, sys.executable, "-c", _CANARY_SRC],
-            stdout=subprocess.PIPE, text=True,
-        )
-
-    def stop(self) -> float | None:
-        self.proc.terminate()
-        try:
-            out, _ = self.proc.communicate(timeout=30)
-        except subprocess.TimeoutExpired:  # wedged canary must not hang the harness
-            self.proc.kill()
-            out, _ = self.proc.communicate()
-        # drop the first sweep (cold buffer/page-faults)
-        dts = [float(l) for l in out.strip().splitlines()[1:] if l.strip()]
-        return round(statistics.median(dts), 6) if dts else None
-
-
-def run_once(cpus: int, n_pages: int, corpus_dir: str, gate: bool = True) -> dict:
-    if gate:
-        wait_for_idle(
-            float(os.environ.get("SCALING_IDLE_THRESH", "1.2")),
-            float(os.environ.get("SCALING_IDLE_WAIT_S", "420")),
-        )
-    load_before = loadavg()
-    # the canary must sit OUTSIDE the job's pinned set (cores
-    # 0..cpus-1) or it times the job itself, not the neighbours; on a
-    # box with no spare core (cpus == cpu_count) there is no outside
-    # seat, so skip the canary rather than time the job (ADVICE r3)
-    canary_core = int(os.environ.get("SCALING_CANARY_CORE", "30"))
-    if canary_core < cpus:
-        canary_core = (os.cpu_count() or 0) - 1
-    canary = Canary(str(canary_core)) if canary_core >= cpus else None
+def run_once(cpus: int, n_pages: int, corpus_dir: str) -> dict:
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
@@ -175,8 +104,8 @@ def run_once(cpus: int, n_pages: int, corpus_dir: str, gate: bool = True) -> dic
         BENCH_HARVEST_PAGES=str(n_pages),
         BENCH_CORPUS_DIR=corpus_dir,
         BENCH_HARVEST_ONLY="1",
-        # one timed harvest per sample: min-of-N happens ACROSS samples
-        # here (interleaved rounds), not inside bench.py
+        # one timed harvest per sample: the samples of a level are the
+        # interleaved rounds here, not repeats inside bench.py
         BENCH_HARVEST_RUNS="1",
     )
     # pin the whole process tree (JVM task threads, GC/shuffle/IO
@@ -189,26 +118,12 @@ def run_once(cpus: int, n_pages: int, corpus_dir: str, gate: bool = True) -> dic
         env=env, cwd=REPO, capture_output=True, text=True, check=True,
     )
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    d = json.loads(line)
-    d["load_before"] = load_before
-    d["canary_dt"] = canary.stop() if canary is not None else None
-    # mid-run burst detection (round-2 lesson: the pre-run gate can't
-    # see a neighbour burst that starts mid-run and ruins the sample;
-    # attempt 4 lost 3 of 4 local[8] runs that way). The 1-min loadavg
-    # right after the run ≈ neighbour load DURING the run + this job's
-    # own `cpus` pinned threads; anything well beyond that is a
-    # neighbour burst — flag the sample and exclude it from the
-    # estimators (still published in the raw log).
-    d["load_after"] = loadavg()
-    burst = float(os.environ.get("SCALING_BURST_THRESH", "2.0"))
-    d["burst"] = (float(d["load_after"]) - cpus) > burst
-    return d
+    return json.loads(line)
 
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    load_before = loadavg()
     # always probe the actual N/4N window: a non-default SCALING_N
     # must not fall through to a fabricated ceiling
     probe = capacity_probe(
@@ -222,7 +137,7 @@ def main() -> None:
     results: dict[int, list[dict]] = {N_CORES: [], N4_CORES: []}
     # warmup (one per level) + timed runs, interleaved for fairness
     for cpus in (N_CORES, N4_CORES):
-        run_once(cpus, n_pages, corpus_dir, gate=False)
+        run_once(cpus, n_pages, corpus_dir)
     for i in range(runs):
         for cpus in (N_CORES, N4_CORES):
             r = run_once(cpus, n_pages, corpus_dir)
@@ -232,116 +147,58 @@ def main() -> None:
                     "n_pages": n_pages, "cpus": cpus, "run": i,
                     "docs_per_sec": r["docs_per_sec"],
                     "harvest_s": r["queries"]["harvest"],
-                    "load_before": r["load_before"],
-                    "load_after": r["load_after"], "burst": r["burst"],
-                    "canary_dt": r["canary_dt"],
                 }) + "\n")
-            print(f"[scaling] run {i} local[{cpus}]: {r['docs_per_sec']} u/s "
-                  f"(load {r['load_before']}->{r['load_after']}"
-                  f"{' BURST' if r['burst'] else ''})", flush=True)
+            print(f"[scaling] run {i} local[{cpus}]: {r['docs_per_sec']} u/s",
+                  flush=True)
 
-    # estimators over clean samples: drop (a) loadavg bursts, (b)
-    # samples whose mid-run canary ran >SCALING_CANARY_TOL slower than
-    # the same level's fastest canary (sustained neighbour DRAM
-    # pressure the loadavg heuristic misses — neighbour load can only
-    # ever slow a run). Fall back to all if a level loses everything.
-    tol = float(os.environ.get("SCALING_CANARY_TOL", "0.15"))
-
-    def _clean(rs):
-        no_burst = [r for r in rs if not r["burst"]] or rs
-        dts = [r["canary_dt"] for r in no_burst if r.get("canary_dt")]
-        if not dts:
-            return no_burst
-        c_min = min(dts)
-        quiet = [
-            r for r in no_burst
-            if r.get("canary_dt") and r["canary_dt"] <= c_min * (1 + tol)
-        ]
-        return quiet or no_burst
-
-    clean = {cpus: _clean(rs) for cpus, rs in results.items()}
-    n_burst = {
-        cpus: len(rs) - len(clean[cpus]) for cpus, rs in results.items()
-    }
     med = {
         cpus: statistics.median(r["docs_per_sec"] for r in rs)
-        for cpus, rs in clean.items()
+        for cpus, rs in results.items()
     }
     harvest_med = {
         cpus: statistics.median(r["queries"]["harvest"] for r in rs)
-        for cpus, rs in clean.items()
+        for cpus, rs in results.items()
     }
-    best = {
-        cpus: max(r["docs_per_sec"] for r in rs)
-        for cpus, rs in clean.items()
-    }
-    eff_med = (med[N4_CORES] / med[N_CORES]) / 4.0
-    eff = (best[N4_CORES] / best[N_CORES]) / 4.0
+    eff = (med[N4_CORES] / med[N_CORES]) / 4.0
     # the machine's own ceilings over the same N→4N window (a data
-    # pipeline cannot scale past the DRAM bus); hard error rather
-    # than a silent made-up number if the probes missed the window
+    # pipeline cannot scale past the DRAM bus)
     mem_ceiling = mem_probe[N4_CORES] / mem_probe[N_CORES]
     cpu_ceiling = probe[N4_CORES] / probe[N_CORES]
-    eff_vs_ceiling = (best[N4_CORES] / best[N_CORES]) / mem_ceiling
-    load_after = loadavg()
+    eff_vs_ceiling = (med[N4_CORES] / med[N_CORES]) / mem_ceiling
 
     lines = [
         "# BENCH/BASELINE.md — scaling evidence (N vs 4N)",
         "",
         "Protocol (per BASELINE.md): identical harvest job, identical",
         f"pre-generated corpus ({n_pages} pages, parquet on disk), fresh JVM per",
-        f"run pinned with taskset to exactly N / 4N CPUs (so JVM helper",
+        "run pinned with taskset to exactly N / 4N CPUs (so JVM helper",
         "threads can't free-ride on idle cores, as they couldn't on a real",
         f"N-core executor), 1 warmup + {runs} timed runs per level,",
         "interleaved. Work unit = URLs fetched + JSON-LD docs extracted (the",
         "BASELINE.json metric); wall time covers fetch-join + extract +",
         "fixup + dedup + documents/prov/metrics writes; session startup,",
-        "frontier build and corpus generation excluded.",
+        "frontier build and corpus generation excluded. No run waits for",
+        "an idle host and no sample is excluded: the estimator is the",
+        "median of all samples per level.",
         "",
-        "| cluster size | cores | median harvest s | median units/s | best units/s |",
-        "|---|---|---|---|---|",
-        f"| N  | local[{N_CORES}]  | {harvest_med[N_CORES]:.2f} | {med[N_CORES]:.1f} | {best[N_CORES]:.1f} |",
-        f"| 4N | local[{N4_CORES}] | {harvest_med[N4_CORES]:.2f} | {med[N4_CORES]:.1f} | {best[N4_CORES]:.1f} |",
+        "| cluster size | cores | median harvest s | median units/s |",
+        "|---|---|---|---|",
+        f"| N  | local[{N_CORES}]  | {harvest_med[N_CORES]:.2f} | {med[N_CORES]:.1f} |",
+        f"| 4N | local[{N4_CORES}] | {harvest_med[N4_CORES]:.2f} | {med[N4_CORES]:.1f} |",
         "",
-        f"**Scaling efficiency (least-contended runs) = ({best[N4_CORES]:.1f} / {best[N_CORES]:.1f}) / 4 = {eff:.3f}**",
-        f"(target >= 0.8: {'PASS' if eff >= 0.8 else 'FAIL'}); median-based: {eff_med:.3f}"
-        f" ({'PASS' if eff_med >= 0.8 else 'FAIL'})",
+        f"**Scaling efficiency (medians) = ({med[N4_CORES]:.1f} / {med[N_CORES]:.1f}) / 4 = {eff:.3f}**",
+        f"(target >= 0.8: {'PASS' if eff >= 0.8 else 'FAIL'})",
         "",
-        f"**Machine-ceiling-relative efficiency = {best[N4_CORES]/best[N_CORES]:.2f}x job scaling ÷ "
-        f"{mem_ceiling:.2f}x DRAM-bandwidth ceiling = {eff_vs_ceiling:.3f}** — see",
-        "'The machine's two ceilings' below: on this shared box the memory",
-        f"bus saturates near 5 streaming cores, capping ANY data pipeline at",
-        f"{mem_ceiling:.2f}x over this N→4N window even with zero neighbours, while a",
-        "real 4N-executor cluster multiplies DRAM channels with nodes. The",
-        "job tracks the hardware ceiling, i.e. the PLAN adds no scaling",
-        "loss of its own (no serial driver stage, no skewed shuffle).",
+        f"**Machine-ceiling-relative efficiency = {med[N4_CORES]/med[N_CORES]:.2f}x job scaling ÷ "
+        f"{mem_ceiling:.2f}x DRAM-bandwidth ceiling = {eff_vs_ceiling:.3f}** — a",
+        "data pipeline cannot scale past the memory bus it shares, while a",
+        "real 4N-executor cluster multiplies DRAM channels with nodes.",
         f"(CPU-bound ceiling over the same window, for contrast: {cpu_ceiling:.2f}x.)",
         "",
-        "Estimator note: neighbour load on this shared host can only ever",
-        "*slow* a run, never speed it up, so each timed run waits (capped)",
-        "for an idle host window, and samples that hit mid-run neighbour",
-        "interference are excluded from the estimators (still published).",
-        "Two detectors: (a) post-run 1-min loadavg > own cores + 2.0",
-        "(bursts); (b) a ~0.5%-duty-cycle DRAM canary pinned outside the",
-        "job's cores — a 128 MB strided sweep timed every 3 s during the",
-        f"run; samples whose median sweep ran >{float(os.environ.get('SCALING_CANARY_TOL', '0.15')):.0%} slower than the same",
-        "level's fastest are flagged as contended (the canary is compared",
-        "within-level only, because the job itself slows it more at 4N",
-        f"than at N). Excluded this time: {n_burst[N_CORES]}/{len(results[N_CORES])} at N, {n_burst[N4_CORES]}/{len(results[N4_CORES])} at 4N.",
-        "The fastest of the remaining interleaved runs per level is the",
-        "least-biased estimate of the job's true rate (same reasoning as",
-        "timeit's min-of-N). Every raw sample including the flagged ones",
-        "is published below and in BENCH/scaling_raw.jsonl; medians over",
-        "the clean pool shown alongside.",
+        f"## The machine's two ceilings over N={N_CORES} → 4N={N4_CORES}",
         "",
-        f"## The machine's two ceilings: why N={N_CORES}, and why the raw number",
-        "## cannot reach the bar here",
-        "",
-        "This container reports 32 vCPUs but shares a host with noisy",
-        f"neighbours: /proc/loadavg was {load_before} before and {load_after} after this",
-        "benchmark *with the container otherwise idle*. Two multiprocessing",
-        "probes (run and recorded in the same session as the samples)",
-        "measure what the hardware can actually deliver, as aggregate work",
+        "Two multiprocessing probes, run in the same session as the",
+        "samples, measure what the hardware delivers, as aggregate work",
         "relative to 1 worker:",
         "",
         "| workers | CPU-bound (busy-loop) | memory-bound (64MB strided sum) |",
@@ -349,23 +206,12 @@ def main() -> None:
     ]
     for n in (1, 2, 4, 8, 16, 32):
         lines.append(f"| {n} | {probe.get(n, '')} | {mem_probe.get(n, '—')} |")
-    r8, r32 = probe.get(8, 0), probe.get(32, 0)
     lines += [
         "",
-        f"CPU-bound work stops scaling past ~8 workers (8→32 = {r32/max(r8,1e-9):.2f}x —",
-        "neighbour contention), and memory-bound work stops scaling far",
-        f"earlier: the shared DRAM bus delivers only {mem_ceiling:.2f}x more streaming",
-        f"throughput from {N_CORES} to {N4_CORES} workers. A harvest pipeline moves every",
-        "page through parquet decode → shuffle → Arrow → python string",
-        "processing → parquet encode, so it is bandwidth-bound and tracks",
-        "the memory curve, not the CPU curve. This is a property of the",
-        "single shared memory bus of this box: on a real N→4N *executor*",
-        "scale-up each node brings its own DRAM channels, which is exactly",
-        "what this sandbox cannot emulate. The raw-vs-ceiling split above",
-        "separates what the JOB does (plan quality — no serial stage, no",
-        "skew) from what the box allows.",
-        f"N={N_CORES} vs 4N={N4_CORES} is the window where the hardware curves are",
-        "flattest; the job is identical at both levels: same plan, same",
+        "A harvest pipeline moves every page through parquet decode →",
+        "shuffle → Arrow → python string processing → parquet encode, so",
+        "it is bandwidth-bound and tracks the memory curve more than the",
+        "CPU curve. The job is identical at both levels: same plan, same",
         "partitioning (2x defaultParallelism url_hash buckets after the",
         "fetch join), no driver-side row loops.",
         "",
@@ -374,13 +220,11 @@ def main() -> None:
         "bottleneck, shuffle-light plan, uniform bucketing), not network/IO",
         "behavior of a real multi-executor deployment.",
         "",
-        "Raw runs (docs_per_sec @ pre-run loadavg -> post-run loadavg @ canary",
-        "median sweep s, *=excluded from estimators):",
-        f"- local[{N_CORES}]:  {[(r['docs_per_sec'], r['load_before'], r['load_after'], r.get('canary_dt'), '*' if r not in clean[N_CORES] else '') for r in results[N_CORES]]}",
-        f"- local[{N4_CORES}]: {[(r['docs_per_sec'], r['load_before'], r['load_after'], r.get('canary_dt'), '*' if r not in clean[N4_CORES] else '') for r in results[N4_CORES]]}",
+        "Raw runs (docs_per_sec, in run order):",
+        f"- local[{N_CORES}]:  {[r['docs_per_sec'] for r in results[N_CORES]]}",
+        f"- local[{N4_CORES}]: {[r['docs_per_sec'] for r in results[N4_CORES]]}",
         "",
     ]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     with open(path, "w") as f:
         f.write("\n".join(lines))
