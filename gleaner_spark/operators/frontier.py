@@ -24,10 +24,11 @@ Design notes for the 10^10-URL scale point:
 
 from __future__ import annotations
 
+from collections import defaultdict
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,6 +37,7 @@ from ..core import sitemap as sm
 from ..core.extract import EARTHCUBE_AGENT
 from ..session import local_frame
 from ..sources.config import Source, SummonerConfig
+from .urlfilter import url_block_reason
 
 SITEMAP_ENTRY_SCHEMA = T.StructType(
     [
@@ -106,9 +108,9 @@ def _map_sitemap_docs(spark: SparkSession, docs: list[tuple[str, str, int, str]]
     the XML bodies go out as ONE broadcast (torrent, cached per
     executor) and each task reads its doc by index from a
     ``spark.range``. Task-embedded payloads would ride every task of
-    every branch that re-runs the parse (the frontier's offsets
-    subquery does), and a ``parallelize``-built relation runs an extra
-    Python task per scan. Parse parallelism == number of sitemap docs
+    every pass that re-runs the parse (the frontier's count pass
+    does), and a ``parallelize``-built relation runs an extra Python
+    task per scan. Parse parallelism == number of sitemap docs
     (at CC scale, thousands; the spec caps one doc at 50k URLs so a
     task is bounded). ``parse_doc(doc, out)`` appends one doc's rows
     to ``out``, a dict of column lists keyed by ``schema``'s fields."""
@@ -205,8 +207,7 @@ FRONTIER_ENTRY_SCHEMA = T.StructType(
         T.StructField("sitemap_seq", T.IntegerType()),
         T.StructField("url", T.StringType()),
         T.StructField("host", T.StringType()),
-        T.StructField("lr", T.IntegerType()),   # rank among survivors, 1-based
-        T.StructField("cnt", T.IntegerType()),  # survivors in this doc
+        T.StructField("lr", T.IntegerType()),  # rank among survivors, 1-based
     ]
 )
 
@@ -223,9 +224,9 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
     trip of the frontier and the plain per-source rank window was an
     unbounded single-task sort (a 10^8-URL source at CC scale). Here
     the task sees one whole sitemap doc (≤50k URLs by spec), so the
-    local rank and the survivor count are free; the global position is
-    the rank plus a cumulative per-doc offset from a tiny broadcast
-    table. Row-identical to the unfused chain (pinned by test)."""
+    local rank is free; the global position is the rank plus a
+    cumulative per-doc offset (``build_frontier``). Row-identical to
+    the unfused chain (pinned by test)."""
     robots_by_host = robots_bodies or {}
     _groups: dict[str, rb.Group | None] = {}
 
@@ -245,7 +246,6 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
             urls = sm.parse_sitemap(xml)
         except sm.SitemapParseError:
             return  # MultiError semantics: log & continue
-        start = len(out["url"])
         lr = 0
         for u in urls:
             # S10 via the SHARED normalizer — recrawl claims key on
@@ -263,10 +263,49 @@ def _frontier_entries_df(spark: SparkSession, docs: list[tuple[str, str, int, st
             out["url"].append(norm)
             out["host"].append(host)
             out["lr"].append(lr)
-            out["cnt"].append(0)
-        out["cnt"][start:] = [lr] * (len(out["url"]) - start)
 
     return _map_sitemap_docs(spark, docs, parse_doc, FRONTIER_ENTRY_SCHEMA)
+
+
+FRONTIER_COLUMNS = (
+    "host", "source_name", "url", "url_hash", "url_sha", "position",
+    "state", "attempt", "threads", "delay_ms",
+    "fetch_seq", "lane", "scheduled_offset_ms",
+)
+RANK_OFFSETS_SCHEMA = (
+    "source_name string, sitemap_seq int, host string, "
+    "pos_off long not null, seq_off long not null"
+)
+
+
+def _rank_offsets(counts) -> list[tuple]:
+    """Both rank offsets from the count pass's rows (source_name,
+    sitemap_seq, host, n = robots survivors, k = blocklist survivors),
+    one row per (doc, host) that keeps any row:
+
+    - ``pos_off``: survivors in the source's earlier docs (running sum
+      of ``n`` over ``sitemap_seq``), so position = pos_off + lr;
+    - ``seq_off``: the host's kept rows in earlier (source_name,
+      sitemap_seq) docs (running sum of ``k``), so fetch_seq = seq_off
+      + the row's rank among its host's kept rows in the doc.
+
+    A NULL host is one host, as it is one partition of the plain
+    ``Window.partitionBy("host")``. Python orders ``str`` by code
+    point, which is Spark's UTF-8 byte order."""
+    doc_n: dict[tuple[str, int], int] = defaultdict(int)
+    for r in counts:
+        doc_n[(r["source_name"], r["sitemap_seq"])] += r["n"]
+    pos_off, source_run = {}, defaultdict(int)
+    for doc in sorted(doc_n):
+        pos_off[doc] = source_run[doc[0]]
+        source_run[doc[0]] += doc_n[doc]
+    rows, host_run = [], defaultdict(int)
+    for r in sorted(counts, key=lambda r: (r["source_name"], r["sitemap_seq"])):
+        if r["k"]:
+            doc = (r["source_name"], r["sitemap_seq"])
+            rows.append((*doc, r["host"], pos_off[doc], host_run[r["host"]]))
+            host_run[r["host"]] += r["k"]
+    return rows
 
 
 def build_frontier(
@@ -277,24 +316,59 @@ def build_frontier(
     summoner: SummonerConfig | None = None,
     rude: bool = False,
     headless: bool = False,
+    *,
+    blocked_hosts: tuple[str, ...] = (),
+    blocked_words: tuple[str, ...] = (),
+    blocked: Observation | None = None,
 ) -> tuple[DataFrame, list[str]]:
-    """frontier table: source_name, url, host, url_hash, url_sha,
-    position, state, attempt (SURVEY §1.2). Plus per-source politeness
-    columns threads/delay_ms (S12/S13 semantics incl. units quirk).
+    """The scheduled frontier table, ``FRONTIER_COLUMNS``: host,
+    source_name, url, url_hash, url_sha, position, state, attempt
+    (SURVEY §1.2), the per-source politeness columns threads/delay_ms
+    (S12/S13 semantics incl. units quirk) and ``schedule_fetches``'
+    columns fetch_seq, lane, scheduled_offset_ms (S13).
 
-    Plan shape (profiled, VERDICT r3 #8): ONE Python stage (the fused
-    parse task), no full-frontier exchange at all — position comes
-    from the in-task survivor rank plus broadcast per-doc offsets;
-    hashing/state/politeness are JVM column expressions. The offsets
-    branch re-runs the (cheap, bounded) parse on the tiny count
-    projection rather than caching the frontier — at CC scale a
-    second 50k-URL XML parse per sitemap is noise next to an extra
-    persist of a 10^10-row frontier."""
+    ``blocked_hosts``/``blocked_words`` are the opt-in URL blocklist
+    of ``operators.urlfilter.filter_urls`` (default empty = reference
+    parity), applied after position is assigned (positions keep their
+    gaps) and before scheduling, so a blocked URL never takes a fetch
+    lane or delay budget. ``blocked``, if given, counts the dropped
+    rows (metric ``n``) when the frontier is consumed.
+
+    Plan shape: the fused parse (one Python stage) runs twice and
+    nothing persists the frontier.
+
+    1. Count pass: per (source_name, sitemap_seq, host), the robots
+       survivors ``n`` and blocklist survivors ``k``, collected. That
+       is docs × hosts rows, and a doc holds ≤50k URLs by spec.
+    2. The driver turns the counts into both rank offsets
+       (``_rank_offsets``), shipped as ONE local relation.
+    3. Write pass: position = in-task rank + doc offset; fetch_seq =
+       host offset + row_number within (host, source_name,
+       sitemap_seq) by in-task rank. The salt block is the sitemap
+       doc, already the bound on one parse task, so a 10^8-URL host
+       never lands in one window task; the window is the phase's only
+       exchange. In-task rank order is position order, so ties cannot
+       straddle docs, and fetch_seq equals the plain window's.
+
+    Joining an offsets aggregate back to the frontier instead re-runs
+    the parse under each join, and exchange reuse cannot merge them:
+    the self-join's right side gets fresh attribute ids."""
     summoner = summoner or SummonerConfig()
     docs, errors = resolve_sitemap_docs(sources, sitemap_bodies, robots_bodies, headless)
     entries = _frontier_entries_df(
         spark, docs, None if rude else robots_bodies
     )
+    keep = F.lit(True)
+    if blocked_hosts or blocked_words:
+        keep = url_block_reason("url", blocked_hosts, blocked_words).isNull()
+    entries = entries.withColumn("_keep", keep)
+
+    counts = (
+        entries.groupBy("source_name", "sitemap_seq", "host")
+        .agg(F.count("*").alias("n"), F.count_if("_keep").alias("k"))
+        .collect()
+    )
+    offsets = local_frame(spark, _rank_offsets(counts), RANK_OFFSETS_SCHEMA)
 
     # politeness resolution (S12/S13) — tiny per-source table, broadcast later
     politeness = {}
@@ -315,34 +389,27 @@ def build_frontier(
         "source_name string, threads int, delay_ms long",
     )
 
-    # global position = within-doc survivor rank + cumulative per-doc
-    # offset (tiny: one row per sitemap doc, broadcast)
-    counts = entries.groupBy("source_name", "sitemap_seq").agg(
-        F.max("cnt").alias("cnt")
-    )
-    w_off = (
-        Window.partitionBy("source_name")
-        .orderBy("sitemap_seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "off", F.coalesce(F.sum("cnt").over(w_off), F.lit(0))
-    ).drop("cnt")
+    if blocked is not None:
+        entries = entries.observe(blocked, F.count_if(~F.col("_keep")).alias("n"))
+    w = Window.partitionBy("host", "source_name", "sitemap_seq").orderBy("lr")
     frontier = (
-        entries.join(F.broadcast(offsets), ["source_name", "sitemap_seq"])
-        .withColumn("position", (F.col("off") + F.col("lr")).cast("long"))
-        .drop("lr", "cnt", "off")
+        entries.filter(F.col("_keep"))
+        .withColumn("_rn", F.row_number().over(w))
+        .transform(_join_null_safe, offsets, ["source_name", "sitemap_seq", "host"])
+        .withColumn("position", (F.col("pos_off") + F.col("lr")).cast("long"))
+        # long, not int: a 10^10-URL frontier can put >2^31 URLs
+        # behind one host (see schedule_fetches)
+        .withColumn(
+            "fetch_seq", (F.col("seq_off") + F.col("_rn") - F.lit(1)).cast("long")
+        )
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("url_sha", F.sha1(F.col("url")))
         .withColumn("state", F.lit("pending"))
         .withColumn("attempt", F.lit(0))
         .join(F.broadcast(pol_df), "source_name", "left")
-        .select(
-            "source_name", "url", "host", "url_hash", "url_sha", "position",
-            "state", "attempt", "threads", "delay_ms",
-        )
+        .transform(_with_lanes)
     )
-    return frontier, errors
+    return frontier.select(*FRONTIER_COLUMNS), errors
 
 
 def effective_politeness(global_threads: int, global_delay_ms: int,
@@ -359,7 +426,17 @@ def effective_politeness(global_threads: int, global_delay_ms: int,
     return tc, delay
 
 
-SALT_BLOCK = 50_000  # one sitemap file's worth (docs/archive/sitemaps.md:52)
+def _join_null_safe(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """``left.join(F.broadcast(right), keys)``, except that a NULL key
+    matches a NULL key: the plain equi-join drops every row with one.
+    Same columns, in the same order: keys, left's others, right's
+    others."""
+    rest = [c for c in right.columns if c not in keys]
+    r = right.select(*[F.col(k).alias(f"_r_{k}") for k in keys], *rest)
+    cond = [F.col(k).eqNullSafe(F.col(f"_r_{k}")) for k in keys]
+    return left.join(F.broadcast(r), cond).select(
+        *keys, *[c for c in left.columns if c not in keys], *rest
+    )
 
 
 def block_salted_rank(df: DataFrame, part_cols: list[str],
@@ -373,7 +450,8 @@ def block_salted_rank(df: DataFrame, part_cols: list[str],
     tiny count table (broadcast) shifts the local ranks into the
     global order. Row-for-row identical to
     ``row_number().over(Window.partitionBy(part).orderBy(blk, order))
-    - 1``, which is what the equivalence tests pin.
+    - 1``, NULL keys included (they sort first, as in the plain
+    window), which is what the equivalence tests pin.
 
     Correctness requirement on the caller: any tie in ``order_cols``
     must land in one block (blk derived from a prefix of the order
@@ -390,58 +468,45 @@ def block_salted_rank(df: DataFrame, part_cols: list[str],
         "_off", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0))
     ).drop("_cnt")
     return (
-        local.join(F.broadcast(offsets), part_cols + blk_cols)
+        _join_null_safe(local, offsets, part_cols + blk_cols)
         .withColumn(out_col, (F.col("_off") + F.col("_lr")).cast("long"))
         .drop("_lr", "_off")
     )
 
 
-def schedule_fetches(frontier: DataFrame, scalable: bool = False,
-                     block: int = SALT_BLOCK) -> DataFrame:
-    """Politeness scheduler (S13): deterministic per-host fetch order
-    + a simulated clock offset. delay>0 ⇒ one lane per host in
-    sitemap order (reference: threads=1 + sleep, acquire.go:71-73,210);
-    delay==0 ⇒ `threads` parallel lanes round-robin by position.
-
-    Returns frontier + (lane, fetch_seq, scheduled_offset_ms). Live
-    fetching consumes this schedule in ``operators.livefetch``; the
-    streaming-state variant is ``streaming.stateful``.
-
-    ``scalable=True`` is the heavy-tail path (north rule): a plain
-    ``Window.partitionBy(host)`` puts a 50M-URL host into ONE task.
-    Instead the rank is computed in two phases salted by *position
-    block* (range salt, one sitemap file's worth of URLs): a local
-    row_number within (host, source, block) — bounded at ``block``
-    rows per window partition regardless of host size — plus a
-    cumulative block offset from a tiny per-block count table. The
-    result is row-for-row identical to the plain window (pinned by
-    test)."""
+def _with_lanes(df: DataFrame) -> DataFrame:
+    """lane and scheduled_offset_ms from fetch_seq (S13): delay>0 ⇒
+    one lane per host in sitemap order (reference: threads=1 + sleep,
+    acquire.go:71-73,210); delay==0 ⇒ `threads` parallel lanes
+    round-robin by fetch_seq."""
     lanes = F.when(F.col("delay_ms") > 0, F.lit(1)).otherwise(
         F.greatest(F.col("threads"), F.lit(1))
     )
-    if not scalable:
-        # source_name tiebreak: hosts serving several sources have no
-        # reference-defined cross-source order (each source crawls in
-        # its own goroutine) — pick the deterministic one
-        w = Window.partitionBy("host").orderBy("source_name", "position")
-        # long, not int: a 10^10-URL frontier can put >2^31 URLs behind
-        # one host, and an int32 fetch_seq would wrap negative and
-        # reverse the politeness crawl order
-        seq = (F.row_number().over(w) - F.lit(1)).cast("long")
-        df = frontier.withColumn("fetch_seq", seq)
-    else:
-        blk = F.floor((F.col("position") - 1) / F.lit(block)).alias("blk")
-        salted = frontier.withColumn("blk", blk)
-        # blk is derived from position, so order ties are impossible
-        # across blocks; rank per host over (source_name, blk,
-        # position) == the plain window's (source_name, position)
-        df = block_salted_rank(
-            salted, ["host"], ["source_name", "blk"], ["position"],
-            out_col="fetch_seq",
-        ).drop("blk")
-    df = df.withColumn("lane", F.pmod(F.col("fetch_seq"), lanes).cast("int"))
-    df = df.withColumn(
+    return df.withColumn(
+        "lane", F.pmod(F.col("fetch_seq"), lanes).cast("int")
+    ).withColumn(
         "scheduled_offset_ms",
         (F.floor(F.col("fetch_seq") / lanes) * F.col("delay_ms")).cast("long"),
     )
-    return df
+
+
+def schedule_fetches(frontier: DataFrame) -> DataFrame:
+    """Politeness scheduler (S13): deterministic per-host fetch order
+    + a simulated clock offset (``_with_lanes``).
+
+    Returns frontier + (fetch_seq, lane, scheduled_offset_ms). Live
+    fetching consumes this schedule in ``operators.livefetch``; the
+    streaming-state variant is ``streaming.stateful``.
+
+    This plain ``Window.partitionBy(host)`` puts a 50M-URL host into
+    ONE task. ``build_frontier`` therefore ranks per sitemap doc;
+    this function is the reference it is pinned against."""
+    # source_name tiebreak: hosts serving several sources have no
+    # reference-defined cross-source order (each source crawls in its
+    # own goroutine) — pick the deterministic one
+    w = Window.partitionBy("host").orderBy("source_name", "position")
+    # long, not int: a 10^10-URL frontier can put >2^31 URLs behind
+    # one host, and an int32 fetch_seq would wrap negative and reverse
+    # the politeness crawl order
+    seq = (F.row_number().over(w) - F.lit(1)).cast("long")
+    return _with_lanes(frontier.withColumn("fetch_seq", seq))

@@ -315,8 +315,8 @@ def live_fetch_pages(
 ) -> DataFrame:
     """Fetch a scheduled frontier over HTTP, one (host, lane) group per
     task. ``frontier`` must carry the S13 schedule columns (lane,
-    fetch_seq, delay_ms) — pass it through ``schedule_fetches`` first;
-    a lane-less frontier degrades to one lane per host."""
+    fetch_seq, delay_ms), as ``build_frontier``'s output does; a
+    lane-less frontier degrades to one lane per host."""
     accepts = accept_by_source or {}
     hw = headless_wait_by_source or {}
     emit_rows = 64  # bodies held in memory per yielded frame

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..core.prov import org_nquads
 from ..operators import harvest as hv
-from ..operators.frontier import build_frontier, schedule_fetches
+from ..operators.frontier import build_frontier
 from ..session import local_frame
 from ..sources.config import GleanerConfig, Source, SummonerConfig
 from .lake import Lake
@@ -129,26 +129,17 @@ def run_harvest(
         frontier = frontier.filter(F.col("run_id") == run_id).drop("run_id")
         res.frontier_size = frontier.count()
     else:
+        # opt-in URL blocklist (C4/RefinedWeb hygiene), applied inside
+        # the frontier build before politeness scheduling so blocked
+        # URLs never consume a fetch lane or delay budget. Defaults
+        # empty = reference-parity untouched.
+        bobs = Observation() if url_blocked_hosts or url_blocked_words else None
         frontier, errors = build_frontier(
-            spark, sources, sitemap_bodies, robots_bodies, summoner, rude=rude
+            spark, sources, sitemap_bodies, robots_bodies, summoner, rude=rude,
+            blocked_hosts=url_blocked_hosts, blocked_words=url_blocked_words,
+            blocked=bobs,
         )
         res.errors.extend(errors)
-        # opt-in URL blocklist (C4/RefinedWeb hygiene), applied BEFORE
-        # politeness scheduling so blocked URLs never consume a fetch
-        # lane or delay budget; map-side, so it fuses into the
-        # frontier stage. Defaults empty = reference-parity untouched.
-        bobs = None
-        if url_blocked_hosts or url_blocked_words:
-            from ..operators.urlfilter import filter_urls
-
-            bobs = Observation()
-            frontier = frontier.observe(bobs, F.count(F.lit(1)).alias("n"))
-            frontier = filter_urls(
-                frontier,
-                blocked_hosts=url_blocked_hosts,
-                blocked_words=url_blocked_words,
-            )
-        frontier = schedule_fetches(frontier, scalable=True)
         # opt-in per-host URL cap (heavy-tail control at CC scale: a
         # 50M-URL host would otherwise monopolize its lane's politeness
         # budget for months). fetch_seq is the host's crawl-order rank,
@@ -171,11 +162,10 @@ def run_harvest(
             run_id=run_id,
         )
         res.frontier_size = int(fobs.get["n"])
-        after_block = int(cobs.get["n"]) if cobs is not None else res.frontier_size
         if cobs is not None:
-            res.urls_capped = after_block - res.frontier_size
+            res.urls_capped = int(cobs.get["n"]) - res.frontier_size
         if bobs is not None:
-            res.urls_blocked = int(bobs.get["n"]) - after_block
+            res.urls_blocked = int(bobs.get["n"])
         frontier = lake.table("frontier").read(spark)
         frontier = frontier.filter(F.col("run_id") == run_id).drop("run_id")
     res.timings["frontier"] = time.time() - t1

@@ -61,7 +61,7 @@ def _ordered_positions(pages):
     (warc_ts, url) — the capture timestamp IS the crawl order in a
     WARC-derived stream, url breaks ties deterministically.
 
-    Uses the frontier's block-salted rank instead of a plain
+    Uses ``operators.frontier.block_salted_rank`` instead of a plain
     ``Window.partitionBy(source_name)`` (VERDICT r4 #4): a large
     ``maxFilesPerTrigger`` drop concentrated on one source would
     serialize that plain window into a single task. Blocks are hour

@@ -38,8 +38,10 @@ ARROW = "spark.sql.execution.arrow.pyspark.enabled"
 # Jobs and completed tasks on local[4] with 4 shuffle partitions. The
 # list-built relations gave the same counts: their Python tasks ran inside
 # the broadcast jobs a LocalRelation still runs (as JVM tasks), so the plan
-# tests above, not these pins, catch a Python relation coming back.
-HARVEST_BUDGET = (21, 45)
+# tests above, not these pins, catch a Python relation coming back. The
+# harvest's frontier took 4 more jobs and 8 more tasks (21, 45) while
+# its rank offsets were broadcast aggregates joined back to the frontier.
+HARVEST_BUDGET = (17, 37)
 MICRO_BATCH_BUDGET = (11, 27)
 
 

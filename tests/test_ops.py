@@ -1026,46 +1026,109 @@ class TestIvf:
         assert len({(r["cluster"], r["sub"]) for r in sizes}) > 4  # hot cell split
 
 
-class TestScalableScheduling:
-    def test_salted_rank_matches_plain_window(self, spark):
-        from gleaner_spark.operators.frontier import schedule_fetches
+def _urlset(locs):
+    body = "".join(f"<url><loc>{loc}</loc></url>" for loc in locs)
+    return (
+        '<?xml version="1.0"?><urlset '
+        'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        f"{body}</urlset>"
+    )
 
-        rows = []
-        # one giant host (3 sources interleaved), one small host
-        for s in range(3):
-            for p in range(1, 40):
-                rows.append((f"src{s}", f"https://big/u{s}-{p}", "https://big", p,
-                             2 if s == 1 else 1, 100 * (s % 2)))
-        for p in range(1, 5):
-            rows.append(("srcZ", f"https://small/u{p}", "https://small", p, 3, 0))
-        frontier = spark.createDataFrame(
-            rows,
-            "source_name string, url string, host string, position long, "
-            "threads int, delay_ms long",
+
+def _multi_doc_world():
+    """Two sources sharing one host, one of them over a 4-doc sitemap
+    index (plus a malformed doc) that also lists a second host, a
+    robots-disallowed URL and a hostless loc (NULL host); the sources
+    differ in lanes and delay."""
+    from gleaner_spark.sources.config import Source, SummonerConfig
+
+    big, small = "https://big.example.org", "https://small.example.org"
+    children = [f"{big}/a{d}.xml" for d in range(4)] + [f"{big}/broken.xml"]
+    sitemaps = {
+        f"{big}/a-index.xml": (
+            '<?xml version="1.0"?><sitemapindex '
+            'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+            + "".join(f"<sitemap><loc>{c}</loc></sitemap>" for c in children)
+            + "</sitemapindex>"
+        ),
+        f"{big}/broken.xml": "<urlset><url><loc>oops",
+        f"{big}/b.xml": _urlset([f"{big}/b/{i}" for i in range(12)]),
+    }
+    for d in range(4):
+        locs = [f"{small if i % 3 == 0 else big}/a{d}/{i}" for i in range(9)]
+        if d == 1:
+            locs.insert(2, "relative/2")
+        if d == 2:
+            locs.insert(0, f"{big}/private/x")
+        sitemaps[f"{big}/a{d}.xml"] = _urlset(locs)
+    sources = [
+        Source(name="srcA", url=f"{big}/a-index.xml", domain=big),
+        Source(name="srcB", url=f"{big}/b.xml", domain=small, delay_ms=100),
+    ]
+    robots = {big: "User-agent: *\nDisallow: /private/\n"}
+    return sources, sitemaps, robots, SummonerConfig(threads=3, delay_ms=0)
+
+
+class TestScheduledFrontier:
+    """build_frontier's schedule — per-doc rank plus collected offsets,
+    blocklist fused — against the plain chain build_frontier →
+    filter_urls → schedule_fetches (one Window.partitionBy(host))."""
+
+    @pytest.mark.parametrize("block", [
+        {},
+        {"blocked_hosts": ("small.example.org",), "blocked_words": ("/4",)},
+    ])
+    def test_scheduled_build_matches_plain_chain(self, spark, block):
+        from pyspark.sql import Observation
+
+        from gleaner_spark.operators.frontier import (
+            FRONTIER_COLUMNS, build_frontier, schedule_fetches,
         )
-        key = lambda r: (r["host"], r["url"])
-        plain = {key(r): r.asDict() for r in schedule_fetches(frontier).collect()}
-        # block=7 forces many salt blocks per (host, source)
-        salted = {
-            key(r): r.asDict()
-            for r in schedule_fetches(frontier, scalable=True, block=7).collect()
-        }
-        assert plain == salted and len(plain) == len(rows)
+        from gleaner_spark.operators.urlfilter import filter_urls
 
-    def test_salted_rank_zero_based_contiguous_per_host(self, spark):
-        from gleaner_spark.operators.frontier import schedule_fetches
+        sources, sitemaps, robots, summoner = _multi_doc_world()
+        plain, errs = build_frontier(spark, sources, sitemaps, robots, summoner)
+        listed = plain.count()
+        if block:
+            plain = filter_urls(plain, **block)
+        want = {(r["source_name"], r["url"]): r.asDict()
+                for r in schedule_fetches(plain).collect()}
 
-        rows = [("s", f"https://h/u{p}", "https://h", p, 1, 50) for p in range(1, 23)]
-        frontier = spark.createDataFrame(
-            rows,
-            "source_name string, url string, host string, position long, "
-            "threads int, delay_ms long",
+        obs = Observation()
+        fused, errs2 = build_frontier(
+            spark, sources, sitemaps, robots, summoner, blocked=obs, **block
         )
-        got = schedule_fetches(frontier, scalable=True, block=5).collect()
-        seqs = sorted(r["fetch_seq"] for r in got)
-        assert seqs == list(range(22))
-        by_seq = {r["fetch_seq"]: r for r in got}
-        assert by_seq[1]["scheduled_offset_ms"] == 50  # delay pacing intact
+        assert fused.columns == list(FRONTIER_COLUMNS)
+        got = {(r["source_name"], r["url"]): r.asDict() for r in fused.collect()}
+        assert errs == errs2 == []
+        assert got == want
+        assert obs.get["n"] == listed - len(want)
+        if block:
+            assert len(want) < listed
+        else:
+            # the hostless loc keeps its position and is one host
+            assert len(want) == listed == 49
+            assert got[("srcA", "relative/2")]["host"] is None
+            assert got[("srcA", "relative/2")]["fetch_seq"] == 0
+
+    def test_fetch_seq_contiguous_per_host_across_docs_and_sources(self, spark):
+        from gleaner_spark.operators.frontier import build_frontier
+
+        sources, sitemaps, robots, summoner = _multi_doc_world()
+        fused, _ = build_frontier(spark, sources, sitemaps, robots, summoner)
+        rows = [r for r in fused.collect()
+                if r["host"] == "https://big.example.org"]
+        by_seq = sorted(rows, key=lambda r: r["fetch_seq"])
+        assert [r["fetch_seq"] for r in by_seq] == list(range(len(rows)))
+        # crawl order: source name, then sitemap position
+        assert by_seq == sorted(rows, key=lambda r: (r["source_name"], r["position"]))
+        for r in rows:
+            if r["source_name"] == "srcB":  # delay pacing: one lane
+                assert r["lane"] == 0
+                assert r["scheduled_offset_ms"] == 100 * r["fetch_seq"]
+            else:
+                assert r["lane"] == r["fetch_seq"] % 3
+                assert r["scheduled_offset_ms"] == 0
 
 
 class TestFusedFrontier:
@@ -1162,22 +1225,88 @@ class TestFusedFrontier:
         assert "ExistingRDD" not in qe.executedPlan().toString()
         assert entries.count() == sum(len(sm.parse_sitemap(d[3])) for d in docs)
 
-    def test_fused_frontier_single_python_stage_no_full_exchange(self, spark):
-        """Plan pin: the frontier build runs ONE Python stage and no
-        full-frontier exchange (position comes from the broadcast
-        offsets join, not a per-source window sort)."""
-        from gleaner_spark.operators.frontier import build_frontier
+    def test_frontier_phase_parses_each_doc_at_most_twice(
+        self, spark, tmp_lake, monkeypatch
+    ):
+        """Plan pin over every SQL execution of run_harvest's frontier
+        phase (count pass, the lake append, the read-back), blocklist
+        and cap on: the fused parse (MapInPandas) runs at most twice in
+        total, never beneath a BroadcastExchange (an offsets table
+        built from the frontier re-runs the parse under its join), and
+        robots stays fused into it. The run stops where phase 2 starts."""
+        from gleaner_spark.operators import harvest as hv
+        from gleaner_spark.plans.lake import Lake
+        from gleaner_spark.plans.pipeline import run_harvest
         from gleaner_spark.sources import corpus
 
-        f, _ = build_frontier(
-            spark, corpus.build_sources(), corpus.build_sitemaps(200),
-            corpus.build_robots(),
-        )
-        plan = f._jdf.queryExecution().executedPlan().toString()
-        left = plan.split("BroadcastExchange")[0]  # the frontier side
-        assert "ArrowEvalPython" not in plan  # robots fused into parse
-        assert left.count("MapInPandas") == 1
-        assert "Exchange hashpartitioning" not in left
+        class PhaseOneDone(Exception):
+            pass
+
+        def stop(*_a, **_k):
+            raise PhaseOneDone
+
+        monkeypatch.setattr(hv, "fetch_pages", stop)
+        lake = Lake(tmp_lake)
+
+        def phase_one():
+            with pytest.raises(PhaseOneDone):
+                run_harvest(
+                    spark, lake, corpus.build_sources(), None,
+                    corpus.build_sitemaps(200), corpus.build_robots(),
+                    url_blocked_words=("/api/",), max_urls_per_host=20,
+                )
+
+        plans = _final_plans(spark, phase_one)
+        assert lake.table("frontier").read(spark).count() > 0
+        names = [n for p in plans for n in p[0].values()]
+        assert names.count("MapInPandas") <= 2, names
+        assert "ArrowEvalPython" not in names  # robots fused into parse
+        for nodes, children in plans:
+            for nid, name in nodes.items():
+                if name == "BroadcastExchange":
+                    below = _descendants(nid, children)
+                    assert all(nodes[c] != "MapInPandas" for c in below), nodes
+
+
+def _final_plans(spark, run) -> list[tuple[dict, dict]]:
+    """(node id -> name, node id -> child ids) of the physical plan of
+    every SQL execution ``run()`` starts, read from the SQL status
+    store: after an AQE execution that is its final plan alone (an
+    ``executedPlan`` string also prints the initial plan, doubling
+    every count); reused exchanges show their subtree again."""
+    from collections import defaultdict
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids() -> set[int]:
+        seq = store.executionsList()
+        return {seq.apply(i).executionId() for i in range(seq.size())}
+
+    before = execution_ids()
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    for eid in sorted(execution_ids() - before):
+        graph = store.planGraph(eid)
+        seq = graph.allNodes()
+        nodes = {seq.apply(i).id(): seq.apply(i).name() for i in range(seq.size())}
+        children = defaultdict(list)
+        edges = graph.edges()
+        for i in range(edges.size()):
+            children[edges.apply(i).toId()].append(edges.apply(i).fromId())
+        plans.append((nodes, children))
+    assert plans
+    return plans
+
+
+def _descendants(nid, children) -> set:
+    out, todo = set(), list(children[nid])
+    while todo:
+        c = todo.pop()
+        if c not in out:
+            out.add(c)
+            todo.extend(children[c])
+    return out
 
 
 class TestCuckooSketch:
@@ -1309,8 +1438,8 @@ class TestStreamingOrderSalting:
         """VERDICT r4 #4: the micro-batch crawl-order rank (hour-
         bucketed block salt over warc_ts) must be row-for-row
         identical to the plain per-source window it replaced —
-        including warc_ts ties broken by url and a batch concentrated
-        on one source."""
+        including warc_ts ties broken by url, a batch concentrated on
+        one source, and NULL warc_ts or source_name."""
         import datetime
 
         from pyspark.sql import Window
@@ -1326,6 +1455,11 @@ class TestStreamingOrderSalting:
         # warc_ts ties within one source: url must break them
         for u in ("z", "m", "a"):
             rows.append(("srcB", f"https://b/{u}", base))
+        # NULL keys: a NULL warc_ts is a NULL block (first, as in the
+        # plain window), a NULL source_name a NULL partition
+        rows += [("srcB", "https://b/null-ts", None),
+                 ("srcA", "https://a/null-ts", None),
+                 (None, "https://c/1", base), (None, "https://c/0", None)]
         df = spark.createDataFrame(rows, "source_name string, url string, warc_ts timestamp")
 
         w = Window.partitionBy("source_name").orderBy("warc_ts", "url")

@@ -1020,3 +1020,50 @@ def test_harvest_per_host_cap_keeps_crawl_order_prefix(spark, tmp_lake, world):
         want.setdefault(corpus.HOSTS[i % corpus.N_SOURCES], []).append(url)
     for host, rows in kept.items():
         assert [u for _, u in rows] == want[host][:cap], host
+
+
+def test_harvest_blocklist_and_cap_rows_match_the_plain_chain(spark, tmp_lake, world):
+    """The harvest's frontier table, blocklist and cap on, is row for
+    row the chain build_frontier → filter_urls → schedule_fetches (the
+    plain per-host window) → fetch_seq < cap: position gaps where URLs
+    were blocked, fetch_seq, lane and scheduled_offset_ms. The blocked
+    and capped counts are the chain's, and the table keeps its column
+    order."""
+    from gleaner_spark.operators.frontier import (
+        FRONTIER_COLUMNS, build_frontier, schedule_fetches,
+    )
+    from gleaner_spark.operators.urlfilter import filter_urls
+
+    cap = 20
+    block = {"blocked_hosts": ("geo1.example.org",), "blocked_words": ("/api/",)}
+    summoner = SummonerConfig(threads=3, delay_ms=0)
+    lake = Lake(tmp_lake)
+    res = run_harvest(
+        spark, lake, world["sources"], world["pages"],
+        world["sitemaps"], world["robots"], summoner=summoner,
+        run_id="chain-1", max_urls_per_host=cap,
+        url_blocked_hosts=block["blocked_hosts"],
+        url_blocked_words=block["blocked_words"],
+    )
+    assert res.errors == []
+    table = lake.table("frontier").read(spark)
+    assert table.columns == [*FRONTIER_COLUMNS, "run_id"]
+    got = {(r["source_name"], r["url"]): r.asDict()
+           for r in table.drop("run_id").collect()}
+
+    listed, _ = build_frontier(
+        spark, world["sources"], world["sitemaps"], world["robots"], summoner
+    )
+    scheduled = schedule_fetches(filter_urls(listed, **block))
+    kept = scheduled.count()
+    want = {(r["source_name"], r["url"]): r.asDict()
+            for r in scheduled.filter(F.col("fetch_seq") < cap).collect()}
+    assert got == want
+    assert res.frontier_size == len(want)
+    assert res.urls_blocked == listed.count() - kept > 0
+    assert res.urls_capped == kept - len(want) > 0
+    # the blocklist left gaps in some source's positions
+    by_source: dict[str, list[int]] = {}
+    for (src, _), r in want.items():
+        by_source.setdefault(src, []).append(r["position"])
+    assert any(max(p) > len(p) for p in by_source.values())
