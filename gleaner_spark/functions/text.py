@@ -5,6 +5,14 @@ Python UDFs) so it whole-stage-codegens and survives a 100× scale-up.
 Each helper has an exact DuckDB-SQL mirror used by the driver's
 oracle checks (see __spark_entry__.py); cross-engine parity dictates
 the md5-based 60-bit hash (both engines lack a shared murmur/xxhash).
+
+One rule for the higher-order functions (``transform``, ``filter``,
+``aggregate``, ``zip_with``): a lambda re-evaluates every non-lambda
+expression it captures, once per element. A lambda over a document's
+tokens that captures ``tokens(col)`` re-splits the document for every
+token, which is quadratic in its length. Pass the array in as a
+function argument (evaluated once per row) or bind it to a lambda
+variable instead, so that a lambda body holds no ``split``.
 """
 
 from __future__ import annotations
@@ -61,18 +69,24 @@ def md5_long(col) -> Column:
 
 def word_shingles(col, n: int = 3) -> Column:
     """n-word shingles (space-joined) as an array column, built with
-    higher-order functions only."""
-    toks = tokens(col)
-    # sequence(0, size-n) guarded to at least produce [] for short docs
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-        ),
-    )
+    higher-order functions only: the k-th shingle zips the k-th
+    tokens of n copies of the token array, each shifted by one. The
+    array is split once and bound to a lambda variable, so the cost
+    per document is linear in its token count."""
+    def shingles(toks: Column) -> Column:
+        m = F.size(toks) - n + 1
+        grams = F.slice(toks, 1, m)
+        for j in range(1, n):
+            grams = F.zip_with(
+                grams, F.slice(toks, j + 1, m),
+                lambda a, b: F.concat_ws(" ", a, b),
+            )
+        # fewer than n tokens (or NULL text): no shingles
+        return F.when(F.size(toks) >= n, grams).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return F.element_at(F.transform(F.array(tokens(col)), shingles), 1)
 
 
 def stopword_count(col, stopwords: list[str]) -> Column:

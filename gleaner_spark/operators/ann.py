@@ -398,7 +398,7 @@ def _salted_cells(probed: DataFrame, n_probe: int,
     for cl, s in splits.items():
         pairs += [F.lit(cl), F.lit(s)]
     smap = F.create_map(*pairs)
-    nsub = F.coalesce(smap.getItem(F.col("cluster")), F.lit(1))
+    nsub = F.coalesce(smap[F.col("cluster")], F.lit(1))
     base = base.withColumn(
         "sub", F.pmod(F.xxhash64(F.col("nbr_id").cast("string")), nsub.cast("long")).cast("int")
     )

@@ -19,10 +19,10 @@ rounds); the star algorithm collapses the same chain in ~20.
 
 Scale shape per round: two groupBy-on-node-id aggregations plus a
 join back to the (shrinking) edge list — no all-pairs, no driver
-state beyond a 2-value convergence fingerprint per round. Lineage is
+state beyond a 3-value convergence fingerprint per round. Lineage is
 truncated every round with ``localCheckpoint`` so the plan does not
-deepen with the iteration count (on a cluster, set a reliable
-checkpoint dir and flip ``use_local_checkpoint=False``).
+deepen with the iteration count, and the fingerprint rides that
+checkpoint's job as an Observation: one job per round.
 
 Determinism: every step takes minima, so the fixed point — and the
 component labels (= min node id in the component) — is unique
@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 _CONSTRAINT_PROP = "spark.sql.constraintPropagation.enabled"
@@ -108,21 +108,26 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int, int]:
-    """(edge count, xor-digest, bounded mod-sum digest) — one action
-    per round, three values to the driver. Order-insensitive over a
-    distinct edge set; ANSI-safe (the mod-sum stays < 10⁹·|E|, no
-    overflow below ~10¹⁰ edges, and the xor never overflows).
-    Collision odds are negligible and a collision only costs an early
-    stop one round before the true fixed point of a monotone
-    contraction (the next round would have been a no-op anyway)."""
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int, int]]:
+    """``edges`` truncated with an eager ``localCheckpoint``, and its
+    (edge count, xor-digest, bounded mod-sum digest), taken by an
+    Observation on that same checkpoint job — one job per round.
+    Order-insensitive over a distinct edge set; ANSI-safe (the mod-sum
+    stays < 10⁹·|E|, no overflow below ~10¹⁰ edges, and the xor never
+    overflows). Collision odds are negligible and a collision only
+    costs an early stop one round before the true fixed point of a
+    monotone contraction (the next round would have been a no-op
+    anyway)."""
+    obs = Observation()
     h = F.xxhash64("u", "v")
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(h), F.lit(0)).alias("x"),
-        F.coalesce(F.sum(F.pmod(h, F.lit(1_000_000_007))), F.lit(0)).alias("s"),
-    ).collect()[0]
-    return int(row["n"]), int(row["x"]), int(row["s"])
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(h).alias("x"),
+        F.sum(F.pmod(h, F.lit(1_000_000_007))).alias("s"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return edges, (int(m["n"]), int(m["x"] or 0), int(m["s"] or 0))
 
 
 def connected_components(
@@ -132,7 +137,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str | None = None,
     max_iter: int = 50,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """Component label (= min member id) per node.
 
@@ -144,20 +148,14 @@ def connected_components(
     Returns (id, component), one row per distinct node.
     """
     with _constraint_propagation_disabled(pairs.sparkSession):
-        edges = _canon_edges(pairs, id_a, id_b)
-        if use_local_checkpoint:
-            edges = edges.localCheckpoint(eager=True)
-        fp = _fingerprint(edges)
+        edges, fp = _checkpoint(_canon_edges(pairs, id_a, id_b))
         converged = fp[0] == 0  # no edges: nothing to contract
         for _ in range(max_iter):
             if converged:
                 break
-            nxt = _small_star(_large_star(edges))
-            if use_local_checkpoint:
-                nxt = nxt.localCheckpoint(eager=True)
-            nfp = _fingerprint(nxt)
+            edges, nfp = _checkpoint(_small_star(_large_star(edges)))
             converged = nfp == fp  # star forests: the only fixed points
-            edges, fp = nxt, nfp
+            fp = nfp
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"

@@ -579,7 +579,7 @@ def prov_table(processed: DataFrame, sources: list[Source], bucket: str,
         if not pairs:
             return F.lit(default)
         m = F.create_map(*pairs)
-        return F.coalesce(m.getItem(F.col("source_name")), F.lit(default))
+        return F.coalesce(m[F.col("source_name")], F.lit(default))
 
     cols = {
         "PID": _meta_map("pid", "unknown"),

@@ -129,6 +129,29 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
+def _top_token_count(toks) -> F.Column:
+    """How often the most frequent token of ``toks`` occurs (0 for
+    NULL): the longest run of equal tokens in the sorted array, found
+    in one pass that carries (previous token, run, longest run)."""
+    start = F.struct(
+        F.lit(None).cast("string").alias("tok"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("top"),
+    )
+
+    def step(acc, t):
+        run = F.when(t == acc["tok"], acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            t.alias("tok"), run.alias("run"),
+            F.greatest(acc["top"], run).alias("top"),
+        )
+
+    return F.coalesce(
+        F.aggregate(F.array_sort(toks), start, step, lambda acc: acc["top"]),
+        F.lit(0),
+    )
+
+
 def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Gopher-style within-document repetition signals (Rae et al.
@@ -141,22 +164,17 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
       duplicate-n-gram share (1 - uniq/n is the Gopher dup fraction).
 
     Scale shape: pure per-row column expressions over the row's own
-    token array — zero exchanges, no UDFs. The top-token scan is
-    O(distinct·n) per row but stays JVM-side; documents are bounded
-    (they fit in a row), so this never becomes a shuffle problem."""
+    token array — zero exchanges, no UDFs. The top-token count sorts
+    the row's tokens and scans them once (O(n log n) per row,
+    JVM-side); documents are bounded (they fit in a row), so this
+    never becomes a shuffle problem."""
     toks = X.tokens(F.col(text_col))
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda x: F.size(F.filter(toks, lambda t: t == x)),
-        )
-    )
     g2 = X.word_shingles(F.col(text_col), 2)
     g3 = X.word_shingles(F.col(text_col), 3)
     return docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
-        F.coalesce(top, F.lit(0)).cast("long").alias("top_token_count"),
+        _top_token_count(toks).cast("long").alias("top_token_count"),
         F.size(g2).cast("long").alias("n_2grams"),
         F.size(F.array_distinct(g2)).cast("long").alias("uniq_2grams"),
         F.size(g3).cast("long").alias("n_3grams"),
@@ -174,15 +192,7 @@ def repetition_filter(docs: DataFrame, text_col: str = "text",
     Documents too short to have 2-grams pass the 2-gram bar (nothing
     repeats in them)."""
     toks = X.tokens(F.col(text_col))
-    top = F.coalesce(
-        F.array_max(
-            F.transform(
-                F.array_distinct(toks),
-                lambda x: F.size(F.filter(toks, lambda t: t == x)),
-            )
-        ),
-        F.lit(0),
-    )
+    top = _top_token_count(toks)
     g2 = X.word_shingles(F.col(text_col), 2)
     keep = (top * 100 <= F.size(toks) * max_top_token_pct) & (
         (F.size(g2) == 0)

@@ -34,7 +34,7 @@ corpus stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.decontam import DEFAULT_N, decontaminate
@@ -277,18 +277,24 @@ def run_corpus_build(
         span_k=span_k, min_quality=min_quality, max_nll=max_nll,
         nb_seed_docs=nb_seed_docs, min_nb=min_nb, langs=langs,
     )
+    # the split counts ride the write; the distinct seq_id count and
+    # the documents count keep their own jobs (an Observation has no
+    # exact distinct count, and one below the keeper semi-join is
+    # dropped when AQE prunes that join)
+    written = Observation()
     entry = lake.table("corpus").append(
-        split_doc_id(corpus, "doc_id"), run_id=run_id
+        split_doc_id(corpus, "doc_id").observe(written, *[
+            F.count_if(F.col("split") == name).alias(f"n{i}")
+            for i, (name, _) in enumerate(splits)
+        ]),
+        run_id=run_id,
     )
+    counts = written.get
+    split_counts = {
+        name: counts[f"n{i}"]
+        for i, (name, _) in enumerate(splits) if counts[f"n{i}"]
+    }
     snap = lake.table("corpus").read_snapshot(spark, entry)
-    agg = (
-        snap.groupBy("split").agg(
-            F.count("*").alias("n"),
-            F.max("seq_id").alias("mx"),
-        ).collect()
-        if snap is not None else []
-    )
-    split_counts = {r["split"]: int(r["n"]) for r in agg}
     n_seqs = snap.select("seq_id").distinct().count() if snap is not None else 0
     return {
         "run_id": run_id,

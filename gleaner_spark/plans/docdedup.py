@@ -34,7 +34,7 @@ beyond-reference LLM-data-pipeline surface (SURVEY §2.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import dedup_clusters
@@ -213,27 +213,32 @@ def run_corpus_dedup(
             "exact_extra_copies": 0, "near_pairs": 0,
             "clusters": 0, "duplicate_docs": 0,
         }
+    # every count rides the job that writes (or first scans) what it
+    # counts: re-counting exact/near would re-run the shingle join, and
+    # a count of a written snapshot is still one more job
+    seen = {k: Observation() for k in ("docs", "exact", "near", "clusters")}
     exact, near = dedup_documents(
-        docs, k=k, bands=bands, rows=rows, n=n, threshold_pct=threshold_pct,
+        docs.observe(seen["docs"], F.count(F.lit(1)).alias("n")),
+        k=k, bands=bands, rows=rows, n=n, threshold_pct=threshold_pct,
         method=method, dim=dim,
     )
-    exact_entry = lake.table("dup_exact").append(exact, run_id=run_id)
-    near_entry = lake.table("dup_near").append(
-        split_doc_id(split_doc_id(near, "id_a"), "id_b"), run_id=run_id
+    exact_entry = lake.table("dup_exact").append(
+        exact.observe(
+            seen["exact"], F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("n_dups") - 1).alias("extra"),
+        ),
+        run_id=run_id,
     )
-    # count the SNAPSHOTS, not the logical plans: re-counting exact/
-    # near would re-run the shingle join, while the written parquet is
-    # a metadata-only count
-    exact_snap = lake.table("dup_exact").read_snapshot(spark, exact_entry)
-    near_snap = lake.table("dup_near").read_snapshot(spark, near_entry)
-    agg = exact_snap.agg(
-        F.count("*").alias("g"), F.sum(F.col("n_dups") - 1).alias("x")
-    ).collect()[0] if exact_snap is not None else None
-    n_groups = int(agg["g"]) if agg else 0
-    extra = int(agg["x"] or 0) if agg else 0
-    n_pairs = near_snap.count() if near_snap is not None else 0
+    near_entry = lake.table("dup_near").append(
+        split_doc_id(split_doc_id(near, "id_a"), "id_b").observe(
+            seen["near"], F.count(F.lit(1)).alias("n")
+        ),
+        run_id=run_id,
+    )
     # cluster stage consumes the WRITTEN snapshots (no LSH recompute,
     # no per-group window over the exact groups)
+    exact_snap = lake.table("dup_exact").read_snapshot(spark, exact_entry)
+    near_snap = lake.table("dup_near").read_snapshot(spark, near_entry)
     exact_groups = (
         exact_snap.select("content_hash", "keeper_id")
         if exact_snap is not None
@@ -245,23 +250,21 @@ def run_corpus_dedup(
     )
     clusters = cluster_documents(docs, exact_groups, near_pairs, keeper=keeper)
     clusters_entry = lake.table("dup_clusters").append(
-        split_doc_id(clusters, "id"), run_id=run_id
+        split_doc_id(clusters, "id").observe(
+            seen["clusters"], F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("is_keeper"), 0).otherwise(1)).alias("dups"),
+        ),
+        run_id=run_id,
     )
-    cl_snap = lake.table("dup_clusters").read_snapshot(spark, clusters_entry)
-    cagg = cl_snap.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("is_keeper"), 0).otherwise(1)).alias("d"),
-    ).collect()[0] if cl_snap is not None else None
-    n_docs_assigned = int(cagg["n"]) if cagg else 0
-    n_dup_docs = int(cagg["d"] or 0) if cagg else 0
+    ex, cl = seen["exact"].get, seen["clusters"].get
     return {
         "run_id": run_id,
-        "documents": docs.count(),
-        "exact_groups": n_groups,
-        "exact_extra_copies": int(extra or 0),
-        "near_pairs": n_pairs,
-        "clusters": n_docs_assigned - n_dup_docs,
-        "duplicate_docs": n_dup_docs,
+        "documents": seen["docs"].get["n"],
+        "exact_groups": ex["n"],
+        "exact_extra_copies": ex["extra"] or 0,
+        "near_pairs": seen["near"].get["n"],
+        "clusters": cl["n"] - (cl["dups"] or 0),
+        "duplicate_docs": cl["dups"] or 0,
         "snapshots": {
             "dup_exact": exact_entry["snapshot_id"],
             "dup_near": near_entry["snapshot_id"],

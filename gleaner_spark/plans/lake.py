@@ -8,7 +8,8 @@ files that belong to it. That gives us the Iceberg properties the
 north rule needs without the (unavailable-offline) Iceberg runtime:
 
 - atomic append  (write files → fsync → append manifest entry last)
-- snapshot reads (read only files listed in the chosen snapshot)
+- snapshot reads (read only files listed in the chosen snapshot, with
+                  the schema its append recorded)
 - resume         (a killed job never published its manifest entry, so
                   partial files are invisible; re-run appends cleanly)
 - lineage        (every snapshot records run_id + per-partition
@@ -28,6 +29,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class LakeTable:
@@ -110,6 +112,7 @@ class LakeTable:
             "ts": time.time(),
             "data_dir": f"snap-{snap_id}",
             "rows": rows,
+            "schema": self._read_schema(df.schema, partition_by or []),
         }
         # an all-rows-filtered PARTITIONED write leaves a dir holding
         # only _SUCCESS — spark.read.parquet on it raises
@@ -126,6 +129,14 @@ class LakeTable:
             return entry
         self._publish(entry)
         return entry
+
+    @staticmethod
+    def _read_schema(schema: StructType, partition_by: list[str]) -> str:
+        """The schema a read of the snapshot sees, as compact JSON: the
+        data columns, then the partition columns (directory names)."""
+        parts = [schema[c] for c in partition_by]
+        data = [f for f in schema.fields if f.name not in partition_by]
+        return StructType(data + parts).json()
 
     @staticmethod
     def _has_data(data_dir: str) -> bool:
@@ -188,12 +199,17 @@ class LakeTable:
         return df
 
     def read_snapshot(self, spark: SparkSession, entry: dict) -> DataFrame | None:
-        """Read exactly one snapshot's data from its append() entry;
-        None for an unpublished or dataless entry."""
+        """Read exactly one snapshot's data from its append() entry,
+        with the schema the entry recorded (inferred for entries that
+        carry none); None for an unpublished or dataless entry."""
         d = os.path.join(self.dir, entry["data_dir"])
         if entry.get("published") is False or not os.path.isdir(d) or not self._has_data(d):
             return None
-        return spark.read.option("mergeSchema", "false").parquet(d)
+        reader = spark.read.option("mergeSchema", "false")
+        if entry.get("schema"):
+            # the schema append() recorded: no schema-inference job
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        return reader.parquet(d)
 
     def drop_snapshot(self, snapshot_id: str) -> None:
         """Remove one snapshot from the manifest (used to discard

@@ -241,6 +241,39 @@ class TestLakeSnapshotHygiene:
         assert len(t.snapshots()) == n_before  # manifest untouched
         assert t.read(spark).count() == 5  # table still readable
 
+    def test_snapshot_reads_with_the_recorded_schema(self, spark, tmp_lake):
+        """read_snapshot takes the schema append() recorded: the same
+        schema a read infers (data columns, then the partition column,
+        all nullable), built without a schema-inference job. The
+        partition column keeps its written type where inference
+        would guess another (source "7" stays a string, not an int)."""
+        from pyspark.sql import functions as F
+
+        from gleaner_spark.plans.lake import Lake
+
+        t = Lake(tmp_lake).table("t")
+        df = spark.range(4).select(
+            F.when(F.col("id") < 2, "7").otherwise("8").alias("source_name"),
+            F.col("id"),
+            F.array(F.col("id").cast("string")).alias("tags"),
+        )
+        entry = t.append(df, run_id="r", partition_by=["source_name"])
+        sc = spark.sparkContext
+        sc.setJobGroup("schema-read", "read_snapshot")
+        try:
+            got = t.read_snapshot(spark, entry)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("schema-read") == []
+        inferred = t.read_snapshot(spark, {**entry, "schema": None})
+        assert [f.name for f in got.schema] == ["id", "tags", "source_name"]
+        assert got.schema["source_name"].dataType.simpleString() == "string"
+        assert inferred.schema["source_name"].dataType.simpleString() == "int"
+        assert got.drop("source_name").schema == inferred.drop("source_name").schema
+        assert sorted(map(tuple, got.collect())) == sorted(
+            (r.id, r.tags, r.source_name) for r in df.collect()
+        )
+
     def test_fused_dedup_collapses_slash_collision_like_reference(self, spark):
         """seen_key = source '/' unique_id is not injective: source
         'a' + id 'b/c' and source 'a/b' + id 'c' concat to one key —

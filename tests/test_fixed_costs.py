@@ -8,8 +8,9 @@ harvest.
 - Small driver-side relations (the frontier's politeness table, the
   micro-batch's host → source table) are Arrow ``LocalRelation``s, not
   ``parallelize``-backed RDDs whose scans run Python jobs.
-- A small ``run_harvest`` and one ``incremental_harvest`` micro-batch stay
-  within a recorded job and task budget.
+- A small ``run_harvest``, one ``incremental_harvest`` micro-batch, and
+  the post-harvest dedup and corpus build stay within a recorded job and
+  task budget.
 - The harvest gives the same rows with Arrow off (the non-Arrow
   ``createDataFrame``/``toPandas`` path).
 """
@@ -25,6 +26,8 @@ import pytest
 
 from gleaner_spark.operators import harvest as hv
 from gleaner_spark.operators.frontier import build_frontier, schedule_fetches
+from gleaner_spark.plans.corpus import run_corpus_build
+from gleaner_spark.plans.docdedup import run_corpus_dedup
 from gleaner_spark.plans.lake import Lake
 from gleaner_spark.plans.pipeline import run_harvest
 from gleaner_spark.sources import corpus
@@ -43,6 +46,11 @@ ARROW = "spark.sql.execution.arrow.pyspark.enabled"
 # its rank offsets were broadcast aggregates joined back to the frontier.
 HARVEST_BUDGET = (17, 37)
 MICRO_BATCH_BUDGET = (11, 27)
+# run_corpus_dedup + run_corpus_build on the toy lake below. They took
+# 72 jobs and 106 tasks while every summary count was a collect or count
+# of its own over a re-read, schema-inferred snapshot, and each component
+# round ran a fingerprint job after its checkpoint job.
+POSTHARVEST_BUDGET = (52, 83)
 
 
 def _freeze_count_on_import(env: dict[str, str]) -> int:
@@ -218,6 +226,56 @@ def test_micro_batch_job_and_task_budget(spark, tmp_path):
     )
     assert lake.table("documents").read(spark).count() > 0
     assert jobs <= MICRO_BATCH_BUDGET[0] and tasks <= MICRO_BATCH_BUDGET[1], (jobs, tasks)
+
+
+def _toy_documents_lake(spark, root: str) -> Lake:
+    """24 documents over two sources: one byte-identical pair across the
+    sources, and near-duplicates that differ in their last word."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(40)) for _ in range(20)]
+    texts += [texts[0], texts[1][:-1] + "x", texts[2][:-1] + "y",
+              texts[2][:-1] + "z"]
+    rows = [(f"src{i % 2}", f"id{i:02d}", t) for i, t in enumerate(texts)]
+    lake = Lake(root)
+    lake.table("documents").append(
+        spark.createDataFrame(rows, "source_name string, unique_id string, jsonld string"),
+        run_id="seed", partition_by=["source_name"],
+    )
+    return lake
+
+
+def _postharvest(spark, lake):
+    dedup = run_corpus_dedup(spark, lake, run_id="d")
+    built = run_corpus_build(
+        spark, lake, run_id="c", capacity=1024,
+        splits=(("train", 50), ("valid", 30), ("test", 20)),
+    )
+    return dedup, built
+
+
+def test_postharvest_summaries(spark, tmp_lake):
+    """The dedup and corpus summaries, as the counting actions gave them."""
+    dedup, built = _postharvest(spark, _toy_documents_lake(spark, tmp_lake))
+    assert set(dedup.pop("snapshots")) == {"dup_exact", "dup_near", "dup_clusters"}
+    assert set(built.pop("snapshots")) == {"corpus"}
+    assert dedup == {
+        "run_id": "d", "documents": 24, "exact_groups": 1,
+        "exact_extra_copies": 1, "near_pairs": 5, "clusters": 20,
+        "duplicate_docs": 4,
+    }
+    assert built == {
+        "run_id": "c", "documents": 24, "corpus_docs": 20,
+        "split_counts": {"train": 8, "valid": 9, "test": 3}, "sequences": 2,
+    }
+
+
+def test_postharvest_job_and_task_budget(spark, tmp_lake):
+    lake = _toy_documents_lake(spark, tmp_lake)
+    _, jobs, tasks = _jobs_and_tasks(spark, lambda: _postharvest(spark, lake))
+    assert jobs <= POSTHARVEST_BUDGET[0] and tasks <= POSTHARVEST_BUDGET[1], (jobs, tasks)
 
 
 def _schedule_rows(spark):

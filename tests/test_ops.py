@@ -231,6 +231,22 @@ class TestTextOps:
         assert "Exchange" not in plan, plan
         assert "Python" not in plan, plan
 
+    def test_top_token_count_edges(self, spark):
+        from gleaner_spark.operators.textops import repetition_stats
+
+        df = spark.createDataFrame(
+            [(1, ""), (2, "   "), (3, "\tb a b\t"), (4, None),
+             (5, "z y z y y x")],
+            "doc_id long, text string",
+        )
+        got = {r["doc_id"]: (r["n_tokens"], r["top_token_count"])
+               for r in repetition_stats(df).collect()}
+        # "" splits to [""]; the tabs are not trimmed, so row 3 splits
+        # to ["", "b", "a", "b", ""]; NULL text has no tokens to count
+        assert got == {1: (1, 1), 2: (1, 1), 3: (5, 2), 4: (None, 0),
+                       5: (6, 3)}
+
+
     def test_remove_boilerplate(self, spark):
         from gleaner_spark.operators.textops import remove_boilerplate
 
@@ -308,6 +324,60 @@ class TestTextOps:
         assert got[1] == "unique article one\nend one"
         assert got[2] == "another story two"
         assert got[3] == "third text"
+
+
+def _lambda_bodies(df) -> list[str]:
+    """The SQL of every lambda body in ``df``'s top projection."""
+    jexprs = df._jdf.queryExecution().analyzed().expressions()
+    out, todo = [], [jexprs.apply(i) for i in range(jexprs.size())]
+    while todo:
+        e = todo.pop()
+        if e.nodeName() == "LambdaFunction":
+            out.append(e.function().sql())
+        kids = e.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+class TestWordShingles:
+    TEXTS = ["", "   ", "\t", "a\tb c", "\ta b\t", "a", "a b", None,
+             "x y x y x", "one two  three   four"]
+
+    def _shingles(self, spark, n):
+        from gleaner_spark.functions.text import word_shingles
+
+        df = spark.createDataFrame(list(enumerate(self.TEXTS)), "i int, t string")
+        rows = df.select("i", word_shingles(F.col("t"), n).alias("s")).collect()
+        return [r.s for r in sorted(rows)]
+
+    def test_bigrams(self, spark):
+        # F.trim strips spaces only: a tab splits off an empty token
+        assert self._shingles(spark, 2) == [
+            [], [], [" "], ["a b", "b c"], [" a", "a b", "b "], [], ["a b"],
+            [], ["x y", "y x", "x y", "y x"],
+            ["one two", "two three", "three four"],
+        ]
+
+    def test_trigrams(self, spark):
+        assert self._shingles(spark, 3) == [
+            [], [], [], ["a b c"], [" a b", "a b "], [], [], [],
+            ["x y x", "y x y", "x y x"],
+            ["one two three", "two three four"],
+        ]
+
+    def test_no_lambda_resplits_the_text(self, spark):
+        """A lambda re-evaluates what it captures once per element, so
+        a split inside a lambda body splits each document once per
+        token (quadratic in its length)."""
+        from gleaner_spark.functions.text import word_shingles
+        from gleaner_spark.operators.textops import repetition_stats
+
+        df = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
+        for n in (1, 2, 3):
+            bodies = _lambda_bodies(df.select(word_shingles(F.col("text"), n)))
+            assert bodies and not any("split(" in b for b in bodies), bodies
+        bodies = _lambda_bodies(repetition_stats(df))
+        assert bodies and not any("split(" in b for b in bodies), bodies
 
 
 class TestSampling:
